@@ -9,6 +9,10 @@ same methodology the frozen bench uses without paying for a full run.
 
 Usage:
   python bench_extra.py q1 [q2 ...] [--sf DIR] [--reps N] [--explain-dir D]
+                        [--cpus N]
+
+--sf defaults to bench.py's SF_DIR ($SPARK_GRAFT_SF_DIR, else the sf0.1
+tables); --cpus to the CPUs this process may run on (as `nproc`).
 """
 
 from __future__ import annotations
@@ -20,14 +24,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import SF_DIR  # noqa: E402
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+    ap.add_argument("--sf", default=SF_DIR)
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--explain-dir", default=None)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
     args = ap.parse_args()
 
     from quarrycore_spark.plans import registry

@@ -39,15 +39,24 @@ _TAG = re.compile(r"<[^>]+>")
 _WS = re.compile(r"\s+", re.ASCII)
 
 
+def split_is_ws_safe(s: str) -> bool:
+    r"""True when `" ".join(s.split())` equals `_WS.sub(" ", s).strip()`:
+    s is ASCII and holds none of \x1c-\x1f. Those four are the only ASCII
+    characters str.split treats as whitespace and re.ASCII \s does not."""
+    return s.isascii() and not (
+        "\x1c" in s or "\x1d" in s or "\x1e" in s or "\x1f" in s
+    )
+
+
 def _collapse_ws(s: str) -> str:
-    """`_WS.sub(" ", s).strip()`, with the ASCII fast path: for ASCII
-    strings `" ".join(s.split())` is byte-identical (str.split's
-    whitespace set restricted to ASCII == re.ASCII \s) and ~10x faster —
-    this was the single most expensive regex pass of the extraction
-    cascade (41 us/doc, run 2-3x per page). Non-ASCII strings keep the
-    regex path: str.split would additionally split on unicode whitespace
-    (e.g. nbsp), which the pinned Java-\s contract must not."""
-    if s.isascii():
+    r"""`_WS.sub(" ", s).strip()`, with the ASCII fast path: where
+    split_is_ws_safe holds, `" ".join(s.split())` is byte-identical and
+    ~10x faster — this was the single most expensive regex pass of the
+    extraction cascade (41 us/doc, run 2-3x per page). Other strings keep
+    the regex path: str.split would additionally split on unicode
+    whitespace (e.g. nbsp) and on \x1c-\x1f, which the pinned Java-\s
+    contract must not."""
+    if split_is_ws_safe(s):
         return " ".join(s.split())
     return _WS.sub(" ", s).strip()
 

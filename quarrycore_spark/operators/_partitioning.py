@@ -8,11 +8,42 @@ corpus becomes 2 scan partitions and the kernel runs almost serially on a
 default parallelism — only when the plan is BELOW it, so at real scale
 (where scans yield thousands of partitions) it is a no-op and adds no
 shuffle.
+
+The decision runs no Spark job when the partition count is fixed by a file
+scan (see ``_planned_partitions``). ``df.rdd.getNumPartitions()`` would
+execute every adaptive query stage under the frame first — on the
+pipeline's survivor frame, a broadcast join over the extraction scan,
+that is one broadcast job per call.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+# physical nodes that keep their child's partitioning one-to-one
+_NARROW = ("ProjectExec", "FilterExec")
+
+
+def _planned_partitions(df: DataFrame) -> int | None:
+    """df's partition count read from its physical plan, without a job:
+    follow narrow nodes and the stream side of a broadcast hash join down
+    to a file scan, whose split count the driver computes from the file
+    listing. None when anything else fixes the count (an exchange's
+    post-shuffle count is known only after it runs)."""
+    node = df._jdf.queryExecution().sparkPlan()
+    while True:
+        cls = node.getClass().getSimpleName()
+        if cls in _NARROW:
+            node = node.child()
+        elif cls == "BroadcastHashJoinExec":
+            left_builds = node.buildSide().toString() == "BuildLeft"
+            node = node.right() if left_builds else node.left()
+        elif cls == "FileSourceScanExec" and node.partitionFilters().isEmpty():
+            # (partition filters may hold a dynamic-pruning subquery that
+            # is only executable after physical preparation)
+            return node.inputRDDs().head().getNumPartitions()
+        else:
+            return None
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -23,4 +54,7 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.isStreaming:
         return df
     par = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par) if df.rdd.getNumPartitions() < par else df
+    n = _planned_partitions(df)
+    if n is None:
+        n = df.rdd.getNumPartitions()
+    return df.repartition(par) if n < par else df

@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from quarrycore_spark.config import DEFAULT_CONFIG, MERSENNE_31, DedupConfig
+from quarrycore_spark.extraction.canonical import split_is_ws_safe
 
 _WS = re.compile(r"\s+", re.ASCII)
 
@@ -55,11 +56,11 @@ def normalize_text(text: str) -> str:
 
     Matches dialect.norm_text: collapse ASCII whitespace runs to one space,
     trim, lowercase. re.ASCII keeps \\s aligned with Java/RE2 semantics.
-    ASCII fast path: " ".join(split()) is byte-identical there (str.split's
-    whitespace set restricted to ASCII == re.ASCII \\s) and ~10x faster;
-    non-ASCII text keeps the regex so unicode whitespace (nbsp etc.) is
-    NOT collapsed, exactly like Java \\s."""
-    if text.isascii():
+    Fast path: " ".join(split()) is byte-identical where split_is_ws_safe
+    holds (ASCII without \\x1c-\\x1f) and ~10x faster; other text keeps
+    the regex so unicode whitespace (nbsp etc.) and \\x1c-\\x1f are NOT
+    collapsed, exactly like Java \\s."""
+    if split_is_ws_safe(text):
         return " ".join(text.split()).lower()
     return _WS.sub(" ", text).strip().lower()
 

@@ -3,9 +3,9 @@
 North-rule replacement for the reference's difflib partial-match scan
 (fuzzy_matcher.py:213-236): two docs share a common substring of length
 >= L iff they share an L-gram, so the scalable form is an equi-join on
-hashed L-grams — all JVM-side column expressions, shuffle on gram hash.
-A true per-group suffix-array refinement (maximal match *extent*) lives in
-substring_extents() as an applyInPandas over candidate groups.
+hashed L-grams — one shuffle on gram hash and one window pass over each
+capped gram bucket. The maximal match *extent* of each candidate pair is
+refined in substring_extents(), an Arrow-batched pass over the pairs.
 """
 
 from __future__ import annotations
@@ -50,15 +50,28 @@ def winnow_fingerprints(nt: str, k: int, w: int) -> np.ndarray:
 
 
 
-def _capped_gram_buckets(grams: DataFrame, cap: int) -> DataFrame:
-    """2..cap gram-bucket filter as a window count over the self-join's own
-    partitioning — one wide shuffle of (doc_id, g), no cached intermediates
-    (same shuffle discipline as operators/lsh.py)."""
-    w = Window.partitionBy("g")
+def _capped_bucket_pairs(grams: DataFrame, cap: int) -> DataFrame:
+    """(a_id, b_id, shared_grams) over (doc_id, g) rows: every doc pair
+    a_id < b_id sharing a gram bucket of 2..cap members, with the number of
+    buckets they share — one wide shuffle of (doc_id, g) and ONE pass over
+    it (same shuffle discipline as operators/lsh.py).
+
+    Both windows share one partitioning and sort (g, doc_id): the first
+    counts each bucket, so boilerplate buckets above the cap are dropped
+    before anything is collected; the second gives each member the
+    running list of the kept bucket's earlier (lower) doc_ids, bounded by
+    the cap. A self-join on g would run the gram kernel once per side."""
+    by_g = Window.partitionBy("g").orderBy("doc_id")
+    whole = by_g.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    lower = by_g.rowsBetween(Window.unboundedPreceding, -1)
     return (
-        grams.withColumn("gsz", F.count(F.lit(1)).over(w))
+        grams.withColumn("gsz", F.count(F.lit(1)).over(whole))
         .filter((F.col("gsz") >= 2) & (F.col("gsz") <= cap))
-        .drop("gsz")
+        .withColumn("lower", F.collect_list("doc_id").over(lower))
+        .select(F.explode("lower").alias("a_id"), F.col("doc_id").alias("b_id"))
+        .filter(F.col("a_id") < F.col("b_id"))
+        .groupBy("a_id", "b_id")
+        .agg(F.count("*").alias("shared_grams"))
     )
 
 
@@ -97,14 +110,7 @@ def winnow_doc_pairs(
     grams = spread(docs.select(id_col, text_col)).mapInPandas(
         compute, schema="doc_id bigint, g bigint"
     )
-    gk = _capped_gram_buckets(grams, cap)
-    a = gk.alias("a")
-    b = gk.alias("b")
-    return (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .agg(F.count("*").alias("shared_grams"))
-    )
+    return _capped_bucket_pairs(grams, cap)
 
 
 def gram_doc_pairs(
@@ -144,17 +150,7 @@ def gram_doc_pairs(
     grams = spread(docs.select(id_col, text_col)).mapInPandas(
         emit_grams, schema="doc_id bigint, g bigint"
     )
-    gk = _capped_gram_buckets(grams, cap)
-    a = gk.alias("a")
-    b = gk.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .agg(F.count("*").alias("shared_grams"))
-    )
+    return _capped_bucket_pairs(grams, cap)
 
 
 # ---------------------------------------------------------------------------
@@ -338,6 +334,15 @@ def longest_common_substring_len(a: str, b: str) -> int:
     return best
 
 
+def _pair_ends(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Rows (a_id, b_id, side, nt) → one row per pair (a_id, b_id, nt_a,
+    nt_b): side 0 carries a_id's text, side 1 b_id's."""
+    cols = ["a_id", "b_id", "nt"]
+    return pdf.loc[pdf["side"] == 0, cols].merge(
+        pdf.loc[pdf["side"] == 1, cols], on=["a_id", "b_id"], suffixes=("_a", "_b")
+    )
+
+
 def substring_extents(
     docs: DataFrame,
     cand: DataFrame,
@@ -349,47 +354,65 @@ def substring_extents(
     and the contains/contained_in/overlap classification
     (reference _classify_match fuzzy_matcher.py:200-211).
 
-    Joins normalized texts onto the (small) candidate pair list, then
-    computes per-pair suffix-array LCS in an Arrow-batched pass. Candidate
-    lists are bounded by the gram join, so texts travel to pairs — at scale
+    `cand` holds distinct (a_id, b_id) pairs, as winnow_doc_pairs and
+    gram_doc_pairs emit them. Each pair is split into its two ends, so the
+    normalized texts are joined ONCE (not once per side); the ends are then
+    hash-partitioned and sorted by (a_id, b_id), which puts both ends of a
+    pair next to each other in one partition, and an Arrow-batched pass
+    pairs them up and computes the LCS extent. A pair whose ends straddle
+    two Arrow batches is carried into the next batch. Candidate lists are
+    bounded by the gram buckets' cap, so texts travel to pairs — at scale
     this is a broadcast-or-shuffle join on doc_id, never an all-pairs op.
     """
     nt = docs.select(F.col(id_col).alias("doc_id"), F.expr(_NORM).alias("nt"))
-    joined = (
-        cand.select("a_id", "b_id")
-        .join(nt.withColumnRenamed("nt", "nt_a"), F.col("a_id") == F.col("doc_id"))
-        .drop("doc_id")
-        .join(
-            nt.withColumnRenamed("nt", "nt_b").withColumnRenamed("doc_id", "doc_id_b"),
-            F.col("b_id") == F.col("doc_id_b"),
+    ends = (
+        cand.select(
+            "a_id", "b_id", F.posexplode(F.array("a_id", "b_id")).alias("side", "doc_id")
         )
-        .drop("doc_id_b")
-        # the pair list is tiny in bytes, so AQE coalesces it to one
-        # partition — but each pair costs a suffix-array build; spread the
-        # CPU-bound verify across all cores
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+        .join(nt, "doc_id")
+        .select("a_id", "b_id", "side", "nt")
+        # the pair list is tiny in bytes, so a bytes-sized exchange would
+        # put it in one partition — but each pair costs an LCS search;
+        # spread the CPU-bound verify across all cores
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism, "a_id", "b_id")
+        .sortWithinPartitions("a_id", "b_id")
     )
 
-    def compute(it):
-        for pdf in it:
-            exts = [
-                lcs_extent_hashed(a, b, lo=min_overlap)
-                for a, b in zip(pdf["nt_a"].astype(str), pdf["nt_b"].astype(str))
-            ]
-            out = pd.DataFrame(
-                {
-                    "a_id": pdf["a_id"].values,
-                    "b_id": pdf["b_id"].values,
-                    "lcs_len": pd.array([e[0] for e in exts], dtype="int64"),
-                    "start_a": pd.array([e[1] for e in exts], dtype="int64"),
-                    "start_b": pd.array([e[2] for e in exts], dtype="int64"),
-                    "len_a": pdf["nt_a"].str.len().astype("int64"),
-                    "len_b": pdf["nt_b"].str.len().astype("int64"),
-                }
-            )
-            yield out
+    def extents(pdf: pd.DataFrame) -> pd.DataFrame:
+        pairs = _pair_ends(pdf)
+        exts = [
+            lcs_extent_hashed(a, b, lo=min_overlap)
+            for a, b in zip(pairs["nt_a"].astype(str), pairs["nt_b"].astype(str))
+        ]
+        return pd.DataFrame(
+            {
+                "a_id": pairs["a_id"].to_numpy(np.int64),
+                "b_id": pairs["b_id"].to_numpy(np.int64),
+                "lcs_len": pd.array([e[0] for e in exts], dtype="int64"),
+                "start_a": pd.array([e[1] for e in exts], dtype="int64"),
+                "start_b": pd.array([e[2] for e in exts], dtype="int64"),
+                "len_a": pairs["nt_a"].str.len().astype("int64").to_numpy(),
+                "len_b": pairs["nt_b"].str.len().astype("int64").to_numpy(),
+            }
+        )
 
-    ext = joined.mapInPandas(
+    def compute(it):
+        carry = None
+        for pdf in it:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if pdf.empty:
+                continue
+            # the batch's last pair may continue in the next batch
+            tail = (pdf["a_id"] == pdf["a_id"].iat[-1]) & (
+                pdf["b_id"] == pdf["b_id"].iat[-1]
+            )
+            carry = pdf[tail]
+            yield extents(pdf[~tail])
+        if carry is not None:
+            yield extents(carry)
+
+    ext = ends.mapInPandas(
         compute,
         schema=(
             "a_id bigint, b_id bigint, lcs_len bigint, start_a bigint, "

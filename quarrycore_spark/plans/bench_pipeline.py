@@ -159,7 +159,7 @@ def main() -> None:
         wout = tempfile.mkdtemp(prefix=f"qc_warm_{cores}_")
         run_pipeline(
             spark, spark.read.parquet(warmup_path), wout,
-            resume=False, checkpoint=True, substring=False,
+            resume=False, substring=False,
         )
         shutil.rmtree(wout, ignore_errors=True)
         print(f"# warmup done ({warmup_path})", file=sys.stderr)
@@ -180,11 +180,11 @@ def main() -> None:
     t0 = time.time()
     # Scaling-run configuration: the measured job is the dedup DETECTION
     # pipeline (extract → exact → signatures → LSH + SimHash pairs → CC →
-    # labels). checkpoint=True keeps parquet stage outputs (columnar
-    # pruning matters: LogicalRDD checkpoints force full-row scans);
+    # labels), checkpointed to parquet stage outputs (columnar pruning
+    # matters: LogicalRDD checkpoints force full-row scans);
     # substring=False excludes the classification-only containment stage
     # whose output does not affect dedup decisions.
-    res = run_pipeline(spark, pages, out, resume=False, checkpoint=True, substring=False)
+    res = run_pipeline(spark, pages, out, resume=False, substring=False)
     wall = time.time() - t0
     stages = {}
     for m in res.metrics:

@@ -15,6 +15,18 @@ Differences by design (SURVEY §3.1 "Spark translation"):
   member×member cliques: O(n) edges instead of O(n²) per group, same
   connected components.
 
+Lineage: one row per (stage, write partition) — each parquet file's row
+count, read from the stage files' footers on the driver (no Spark job).
+
+Jobs per pass: a warm pass over 1,000 crawl pages runs 38 Spark jobs (58
+before stage read-back took the written schema, spread() read partition
+counts from the plan, lineage came from footers and the substring stage
+read each input once). Jobs, not kernels, bound a pass at this size:
+every Python task pays a fixed 0.2-0.4 s of worker set-up, mostly
+``importlib.invalidate_caches()`` in ``pyspark.worker_util.
+setup_spark_files``, which under Python 3.11 re-reads pyspark.zip's
+directory for each of 16 zipimporters on every task.
+
 Run it standalone:
     spark-submit --py-files quarrycore_spark.zip -m quarrycore_spark.plans.pipeline \
         (or: python -m quarrycore_spark.plans.pipeline OUT_DIR
@@ -25,14 +37,18 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from quarrycore_spark.config import DEFAULT_CONFIG, DedupConfig
 from quarrycore_spark.extraction.canonical import extract_pages
+from quarrycore_spark.operators._partitioning import spread
 from quarrycore_spark.operators.cc import connected_components
 from quarrycore_spark.operators.lsh import verified_pairs
 from quarrycore_spark.operators.signatures import with_signatures
@@ -68,73 +84,85 @@ def _save_manifest(out_dir: str, man: dict) -> None:
 
 
 def _stage(
-    spark, out_dir, man, name, builder, resume=True, checkpoint=True,
-    stage_counts=True, extra_obs=None,
+    spark, out_dir, man, name, builder, resume=True, extra_obs=None,
 ) -> DataFrame:
     """Run one stage with checkpoint/resume: if the manifest records the
-    stage as complete, read its parquet instead of recomputing.
-
-    checkpoint=False (bench / short jobs): persist in memory instead of a
-    parquet round-trip — same computation, no resumability, none of the
-    fixed I/O barriers. Long 10^12-doc runs always checkpoint.
-
-    stage_counts=False skips the per-stage row count (one fewer job per
-    stage in checkpoint mode; the write itself observes the count instead).
-    """
+    stage as complete, read its parquet instead of recomputing."""
     path = os.path.join(out_dir, name)
-    if checkpoint and resume and name in man["stages"]:
+    if resume and name in man["stages"]:
         return spark.read.parquet(man["stages"][name]["path"])
     t0 = time.time()
     df = builder()
-    if not checkpoint:
-        # localCheckpoint (not persist): truncates the logical plan, which
-        # both avoids recompute and sidesteps Catalyst constraint-rewrite
-        # errors when unioning cached subplans downstream
-        df = df.localCheckpoint(eager=True)
-        rows = df.count() if stage_counts else None
-    else:
-        from pyspark.sql import Observation
-
-        # Bound the output file count to ~4 files per core: a stage inheriting
-        # hundreds of input splits would otherwise pay one parquet-writer
-        # buffer allocation per split (a serialized cost in this sandbox, and
-        # tiny-file pollution on a real cluster). coalesce (not repartition):
-        # no shuffle, never increases partitions, so it is a no-op for
-        # already-narrow stages — no plan inspection needed.
-        # SPARK_GRAFT_STAGE_FILES pins the count explicitly — the scaling
-        # legs set it so the N and 4N legs run the IDENTICAL job shape
-        # (same task count, same number of 32 MB writer-buffer
-        # allocations); letting it float with defaultParallelism gave the
-        # 1-core leg a structurally cheaper job (4 writer buffers vs 16),
-        # biasing the measured N-vs-4N ratio.
-        n_files = int(
-            os.environ.get("SPARK_GRAFT_STAGE_FILES", "0")
-        ) or 4 * spark.sparkContext.defaultParallelism
-        df = df.coalesce(n_files)
-        obs = Observation(f"stage_{name}_{int(t0 * 1000)}")
-        df.observe(
-            obs, F.count(F.lit(1)).alias("n"), *(extra_obs or [])
-        ).write.mode("overwrite").parquet(path)
-        got = obs.get
-        rows = int(got["n"])
-        if extra_obs:
-            man.setdefault("observations", {})[name] = {
-                k: v for k, v in got.items() if k != "n"
-            }
-        df = spark.read.parquet(path)
+    # Bound the output file count to ~4 files per core: a stage inheriting
+    # hundreds of input splits would otherwise pay one parquet-writer
+    # buffer allocation per split (a serialized cost on hosts whose
+    # first-touch page faults serialize, and tiny-file pollution on a real
+    # cluster). coalesce (not repartition): no shuffle, never increases
+    # partitions, so it is a no-op for already-narrow stages — no plan
+    # inspection needed.
+    # SPARK_GRAFT_STAGE_FILES pins the count explicitly — the scaling
+    # legs set it so the N and 4N legs run the IDENTICAL job shape
+    # (same task count, same number of 32 MB writer-buffer
+    # allocations); letting it float with defaultParallelism gave the
+    # 1-core leg a structurally cheaper job (4 writer buffers vs 16),
+    # biasing the measured N-vs-4N ratio.
+    n_files = int(
+        os.environ.get("SPARK_GRAFT_STAGE_FILES", "0")
+    ) or 4 * spark.sparkContext.defaultParallelism
+    df = df.coalesce(n_files)
+    obs = Observation(f"stage_{name}_{int(t0 * 1000)}")
+    df.observe(
+        obs, F.count(F.lit(1)).alias("n"), *(extra_obs or [])
+    ).write.mode("overwrite").parquet(path)
+    got = obs.get
+    rows = int(got["n"])
+    if extra_obs:
+        man.setdefault("observations", {})[name] = {
+            k: v for k, v in got.items() if k != "n"
+        }
+    # read back with the schema just written: schema inference would run
+    # one Spark job per stage to open a footer the driver already knows
+    df = spark.read.schema(df.schema).parquet(path)
     # drop operator-internal persisted intermediates now that the stage
     # output is materialized — keeps executor storage flat across stages
     from quarrycore_spark.operators._cache import release_tracked
 
     release_tracked(spark)
     man["stages"][name] = {
-        "path": path if checkpoint else None,
+        "path": path,
         "rows": rows,
         "wall_s": round(time.time() - t0, 3),
     }
-    if checkpoint:
-        _save_manifest(out_dir, man)
+    _save_manifest(out_dir, man)
     return df
+
+
+def _footer_lineage(stage_paths: dict[str, str]) -> pa.Table:
+    """The lineage table — (stage, partition_id, rows) for each write
+    partition of each stage's parquet output — as an Arrow table, summed
+    from the file footers on the driver: no Spark job. Spark names every
+    output file part-<write partition>-...; a partition that wrote no rows
+    contributes no lineage row."""
+    stages, pids, rows = [], [], []
+    for stage, path in stage_paths.items():
+        counts: dict[int, int] = {}
+        for f in os.listdir(path):
+            if f.startswith("part-") and f.endswith(".parquet"):
+                pid = int(f.split("-")[1])
+                n = pq.read_metadata(os.path.join(path, f)).num_rows
+                counts[pid] = counts.get(pid, 0) + n
+        for pid, n in sorted(counts.items()):
+            if n:
+                stages.append(stage)
+                pids.append(pid)
+                rows.append(n)
+    return pa.table(
+        {
+            "stage": pa.array(stages, pa.string()),
+            "partition_id": pa.array(pids, pa.int32()),
+            "rows": pa.array(rows, pa.int64()),
+        }
+    )
 
 
 def final_table(
@@ -215,10 +243,8 @@ def run_pipeline(
     cfg: DedupConfig = DEFAULT_CONFIG,
     resume: bool = True,
     min_overlap: int | None = None,
-    checkpoint: bool = True,
     substring: bool = True,
     metadata: bool = False,
-    stage_counts: bool = True,
     cascade_threshold: int = 0,
     domain_overrides: dict | None = None,
     family: str = "poly",
@@ -236,15 +262,14 @@ def run_pipeline(
     # spread the (CPU-bound) extraction across all cores when the input has
     # few parquet splits — but never shuffle the raw HTML if it already has
     # enough partitions (the repartition would move every byte of the corpus)
-    par = spark.sparkContext.defaultParallelism
-    src = pages if pages.rdd.getNumPartitions() >= par else pages.repartition(par)
+    src = spread(pages)
     extracted = _stage(
         spark, out_dir, man, "extracted",
         lambda: extract_pages(
             src, cascade_threshold=cascade_threshold,
             domain_overrides=domain_overrides,
         ).withColumn("doc_id", F.xxhash64("url")),
-        resume, checkpoint, stage_counts,
+        resume,
     )
 
     # ---- stage 1b: page metadata (P14, opt-in, informational) -----------
@@ -258,7 +283,7 @@ def run_pipeline(
         _stage(
             spark, out_dir, man, "page_metadata",
             lambda: with_page_metadata(src),
-            resume, checkpoint, stage_counts,
+            resume,
         )
 
     # ---- stage 2: exact dedup (D1, D2) ----------------------------------
@@ -341,10 +366,7 @@ def run_pipeline(
         # same shingle/permutation/banding structure, ~300× cheaper per doc
         return with_signatures(survivors, cfg, family=family).drop("content_hash")
 
-    sigs = _stage(
-        spark, out_dir, man, "signatures", build_sigs,
-        resume, checkpoint, stage_counts,
-    )
+    sigs = _stage(spark, out_dir, man, "signatures", build_sigs, resume)
 
     # ---- stage 4: near-dup pair generation (D7-D10) ----------------------
     # ONE materialization for both pair families: minhash-verified and
@@ -362,9 +384,7 @@ def run_pipeline(
         )
         return mh.unionByName(sh)
 
-    pairs = _stage(
-        spark, out_dir, man, "pairs", build_pairs, resume, checkpoint, stage_counts,
-    )
+    pairs = _stage(spark, out_dir, man, "pairs", build_pairs, resume)
     mh_pairs = pairs.filter(F.col("kind") == "minhash")
     sh_pairs = pairs.filter(F.col("kind") == "simhash")
 
@@ -384,11 +404,8 @@ def run_pipeline(
         cand = winnow_doc_pairs(survivors, mo, id_col="doc_id", text_col="text")
         return substring_extents(survivors, cand, mo, id_col="doc_id", text_col="text")
 
-    sub_pairs = (
-        _stage(spark, out_dir, man, "substring_pairs", build_substring, resume, checkpoint, stage_counts)
-        if substring
-        else None
-    )
+    if substring:
+        _stage(spark, out_dir, man, "substring_pairs", build_substring, resume)
 
     # ---- stage 5: connected components (D16) -----------------------------
     edges = (
@@ -400,54 +417,41 @@ def run_pipeline(
         spark, out_dir, man, "clusters",
         lambda: connected_components(
             edges, docs.select("doc_id"),
-            checkpoint_dir=os.path.join(out_dir, "cc") if checkpoint else None,
+            checkpoint_dir=os.path.join(out_dir, "cc"),
             resume=resume,
         ),
-        resume, checkpoint, stage_counts,
+        resume,
     )
 
     # ---- stage 6: final labeled docs table (see final_table) -------------
     final = _stage(
         spark, out_dir, man, "docs_dedup",
         lambda: final_table(extracted, docs, clusters, mh_pairs, sh_pairs, cfg),
-        resume, checkpoint,
-        stage_counts,
+        resume,
         extra_obs=[F.sum(F.col("is_duplicate").cast("long")).alias("dups")],
     )
 
-    # ---- lineage: per-partition row counts per stage (north-rule lineage) --
-    def lineage_of(df: DataFrame, stage: str) -> DataFrame:
-        return (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .count()
-            .select(F.lit(stage).alias("stage"), "partition_id", F.col("count").alias("rows"))
-        )
-
-    lineage = (
-        lineage_of(extracted, "extracted")
-        .union(lineage_of(sigs, "signatures"))
-        .union(lineage_of(pairs, "pairs"))
-        .union(lineage_of(final, "docs_dedup"))
+    # ---- lineage: rows per write partition of each stage (north-rule
+    # lineage), from the stage files' parquet footers -------------------
+    lineage_stages = ["extracted", "signatures", "pairs", "docs_dedup"]
+    if substring:
+        lineage_stages.append("substring_pairs")
+    table = _footer_lineage(
+        {stage: man["stages"][stage]["path"] for stage in lineage_stages}
     )
-    if sub_pairs is not None:
-        lineage = lineage.union(lineage_of(sub_pairs, "substring_pairs"))
-    lineage.write.mode("overwrite").parquet(os.path.join(out_dir, "lineage"))
+    lineage_dir = os.path.join(out_dir, "lineage")
+    shutil.rmtree(lineage_dir, ignore_errors=True)
+    os.makedirs(lineage_dir)
+    pq.write_table(table, os.path.join(lineage_dir, "part-00000.parquet"))
+    lineage = spark.createDataFrame(table)
 
     metrics = [
         {"stage": k, **v} for k, v in man["stages"].items()
     ]
-    # summary rides the docs_dedup write's Observation when available
-    # (checkpoint mode); otherwise one aggregate job.
-    obs = man.get("observations", {}).get("docs_dedup")
-    if obs is not None and man["stages"]["docs_dedup"].get("rows") is not None:
-        total = man["stages"]["docs_dedup"]["rows"]
-        dups = int(obs.get("dups") or 0)
-    else:
-        summary_row = final.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("is_duplicate").cast("long")).alias("d"),
-        ).collect()[0]
-        total, dups = summary_row["n"], summary_row["d"] or 0
+    # the summary rides the docs_dedup write's Observation (kept in the
+    # manifest, so a resumed run reports it too)
+    total = man["stages"]["docs_dedup"]["rows"]
+    dups = int(man["observations"]["docs_dedup"].get("dups") or 0)
     metrics.append(
         {
             "stage": "summary", "total_docs": total, "duplicate_docs": dups,

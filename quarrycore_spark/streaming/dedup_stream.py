@@ -96,7 +96,8 @@ class ForeachBatchDedup:
         ]
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        # the schema this class writes: inference would cost one job per epoch
+        return spark.read.schema("content_hash string").parquet(*paths)
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import Window as W

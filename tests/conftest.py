@@ -18,3 +18,23 @@ def spark():
     s = get_spark("quarrycore-tests", cores=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """spark_jobs(fn) -> number of Spark jobs fn() ran, counted from the
+    status tracker's job ids under a job group of its own."""
+    import uuid
+
+    def count(fn) -> int:
+        sc = spark.sparkContext
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -5,6 +5,8 @@ reference's trafilatura tier, cascade_extractor.py:479-499)."""
 
 from __future__ import annotations
 
+import pytest
+
 from quarrycore_spark.extraction.canonical import (
     cascade_extract,
     extract_main_text,
@@ -608,3 +610,20 @@ def test_inert_and_control_subtrees_removed():
     for leak in ("Sort by newest", "Write a comment", "Inert template",
                  "chart label"):
         assert leak not in text
+
+
+# ASCII fast path of the whitespace collapse: `" ".join(s.split())` must
+# equal the regex contract (`re.ASCII \s`, the same set as Java's \s). The
+# two differ on \x1c-\x1f, which str.split treats as whitespace; non-ASCII
+# samples take the regex path and must not collapse unicode whitespace.
+@pytest.mark.parametrize(
+    "ch", [chr(c) for c in range(128)] + ["\xa0", "\x85", "\u2028", "\u3000", "\xe9"]
+)
+def test_whitespace_collapse_matches_regex(ch):
+    from quarrycore_spark.extraction.canonical import _WS, _collapse_ws
+    from quarrycore_spark.operators.signatures import normalize_text
+
+    s = f"{ch}Ab{ch}{ch}c \t d{ch} "
+    want = _WS.sub(" ", s).strip()
+    assert _collapse_ws(s) == want
+    assert normalize_text(s) == want.lower()

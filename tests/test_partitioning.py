@@ -1,0 +1,39 @@
+"""spread(): the partition-count decision ahead of CPU-bound kernels runs
+no Spark job on scan-rooted plans, broadcast joins over a scan included,
+and agrees with the count `.rdd` reports."""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from quarrycore_spark.operators._partitioning import _planned_partitions, spread
+
+
+def test_spread_is_job_free_over_broadcast_join(spark, spark_jobs, tmp_path):
+    path = str(tmp_path / "scan")
+    spark.range(2000).select(
+        F.col("id").alias("doc_id"), F.concat(F.lit("text "), F.col("id")).alias("text")
+    ).repartition(3).write.parquet(path)
+    scan = spark.read.parquet(path)
+    # the pipeline's survivor shape: a broadcast id side that needs a
+    # shuffle of its own, joined to the text scan
+    ids = F.broadcast(scan.filter("doc_id % 3 = 0").groupBy("doc_id").count().select("doc_id"))
+    survivors = ids.join(scan.select("doc_id", "text"), "doc_id")
+
+    for df in (scan, survivors):
+        planned = []
+        assert spark_jobs(lambda: planned.append(_planned_partitions(df))) == 0
+        assert planned[0] == df.rdd.getNumPartitions() == 3
+        spread_out = []
+        assert spark_jobs(lambda: spread_out.append(spread(df, 8))) == 0
+        assert spread_out[0].rdd.getNumPartitions() == 8
+        assert spread(df, 2) is df
+
+
+def test_spread_falls_back_past_an_exchange(spark):
+    """A frame whose count an exchange fixes keeps the `.rdd` decision."""
+    agg = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    assert _planned_partitions(agg) is None
+    want = agg.rdd.getNumPartitions()
+    assert spread(agg, want + 1).rdd.getNumPartitions() == want + 1
+    assert spread(agg, want) is agg
