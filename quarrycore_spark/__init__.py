@@ -14,3 +14,19 @@ citations in docstrings exist so parity can be audited.
 __version__ = "0.1.0"
 
 from quarrycore_spark.config import DedupConfig  # noqa: F401
+
+
+def _on_spark_worker() -> bool:
+    # set by pyspark.worker_util.setup_spark_files before a task's function
+    # is unpickled, and never on the driver
+    try:
+        from pyspark.core.files import SparkFiles
+    except ImportError:
+        return False
+    return SparkFiles._is_running_on_worker
+
+
+if _on_spark_worker():
+    from quarrycore_spark.session import install_stat_checked_zipimport
+
+    install_stat_checked_zipimport()

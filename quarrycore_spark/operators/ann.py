@@ -32,6 +32,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -493,30 +494,33 @@ def ivf_topk(
     just to collect the codebook, so the composed query paid five
     full-table scans; this shape pays three (assignments scan, the
     candidate join's vector re-attach, and the one collect). The probe
-    kernel runs over a driver-parallelized frame of the already-collected
-    query rows instead of a fourth scan — at the caps those rows are
-    already driver-resident for the broadcast, so no new driver-memory
-    class is introduced. The per-class loud-cap raises are preserved: the
-    combined limit (max_queries + centroid cap + 2) guarantees that
-    whenever either class exceeds its cap, more than cap rows of SOME
-    over-cap class are collected (pigeonhole), so a RuntimeError still
-    fires before any oversized broadcast."""
+    kernel runs over an Arrow-built frame of the already-collected query
+    rows (no Python tasks to read it back) instead of a fourth scan — at
+    the caps those rows are already driver-resident for the broadcast, so
+    no new driver-memory class is introduced. The caps
+    stay loud: the combined limit (max_queries + centroid cap + 2)
+    guarantees that whenever either class exceeds its cap, more than cap
+    rows of SOME over-cap class are collected (pigeonhole), so a
+    RuntimeError fires before any oversized broadcast. The limit decides
+    which rows arrive, so the collected counts are lower bounds and need
+    not show every class that is over; the error gives both counts against
+    both caps and strides instead of naming one class."""
     spark = emb.sparkSession
     qv = quantized_frame(emb, spread=False).filter(F.col("na") > 0)
     cent_cap = MAX_BROADCAST_CENTROIDS
+    limit = max_queries + cent_cap + 2
     both = qv.filter(
         (F.col("vec_id") % stride == 0) | (F.col("vec_id") % cent_stride == 0)
-    ).limit(max_queries + cent_cap + 2).collect()
+    ).limit(limit).collect()
     qrows = [r for r in both if r["vec_id"] % stride == 0]
     crows = [r for r in both if r["vec_id"] % cent_stride == 0]
-    if len(qrows) > max_queries:
+    if len(qrows) > max_queries or len(crows) > cent_cap:
         raise RuntimeError(
-            f"ivf_topk: >{max_queries} query vectors at stride={stride}"
-        )
-    if len(crows) > cent_cap:
-        raise RuntimeError(
-            f"ivf: >{cent_cap} centroids at stride={cent_stride}; raise the "
-            "stride — refusing to broadcast an unbounded codebook"
+            f"ivf_topk: refusing to broadcast; {len(both)} rows collected "
+            f"(limit {limit}) hold query vectors: {len(qrows)} "
+            f"(cap {max_queries}, stride={stride}); centroids: {len(crows)} "
+            f"(cap {cent_cap}, cent_stride={cent_stride}). Raise the "
+            "stride of each class over its cap"
         )
 
     def _arrays(rows):
@@ -533,10 +537,11 @@ def ivf_topk(
     q_ids, q_Q, q_na = _arrays(qrows)
     cent = _arrays(crows)
     bq = spark.sparkContext.broadcast((q_ids, q_Q, q_na))
-    queries_df = spark.createDataFrame(
-        [(int(i), [int(x) for x in q], int(n)) for i, q, n in zip(q_ids, q_Q, q_na)],
-        schema=_QV_SCHEMA,
-    )
+    queries_df = spark.createDataFrame(pa.table({
+        "vec_id": pa.array(q_ids, pa.int64()),
+        "q": pa.array(list(q_Q), pa.list_(pa.int64())),
+        "na": pa.array(q_na, pa.int64()),
+    }))
 
     probe_df = ivf_probes(emb, stride, cent_stride, nprobe,
                           _cent=cent, _queries=queries_df)

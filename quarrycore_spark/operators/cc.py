@@ -19,6 +19,7 @@ import json
 import logging
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -236,13 +237,17 @@ def _union_find_labels(
             # union by min so the root IS the cluster id
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
-    labels = [(n, find(n)) for n in parent]
-    if not labels:
+    if not parent:
         return vertices.select(
             F.col(vertices.columns[0]).alias("doc_id"),
             F.col(vertices.columns[0]).alias("cluster_id"),
         )
-    roots = spark.createDataFrame(labels, "u long, v long")
+    # from an Arrow table the JVM builds the frame itself; a list of tuples
+    # would become a Python RDD, whose tasks start Python workers
+    roots = spark.createDataFrame(pa.table({
+        "u": pa.array(list(parent), pa.int64()),
+        "v": pa.array([find(n) for n in parent], pa.int64()),
+    }))
     return _labels(roots, vertices)
 
 

@@ -18,14 +18,20 @@ Differences by design (SURVEY §3.1 "Spark translation"):
 Lineage: one row per (stage, write partition) — each parquet file's row
 count, read from the stage files' footers on the driver (no Spark job).
 
-Jobs per pass: a warm pass over 1,000 crawl pages runs 38 Spark jobs (58
+Jobs per pass: a warm pass over 1,000 crawl pages runs 36 Spark jobs (58
 before stage read-back took the written schema, spread() read partition
 counts from the plan, lineage came from footers and the substring stage
-read each input once). Jobs, not kernels, bound a pass at this size:
-every Python task pays a fixed 0.2-0.4 s of worker set-up, mostly
-``importlib.invalidate_caches()`` in ``pyspark.worker_util.
-setup_spark_files``, which under Python 3.11 re-reads pyspark.zip's
-directory for each of 16 zipimporters on every task.
+read each input once; 38 before CC's union-find roots came from an Arrow
+table instead of a parallelized list). Jobs and tasks, not kernels, bound
+a pass at this size. Each Python task runs ``importlib.invalidate_caches()``
+in ``pyspark.worker_util.setup_spark_files``; under Python 3.11 that
+re-read the directories of pyspark.zip (12 importers, 1,328 entries), the
+spark-core jar (2, 5,359 entries) and py4j (2) on every task: 0.2-0.3 s
+a task, 4.2-4.8 s over the 16 timed calls of a warm 1,000-page pass.
+Importing this package in a worker swaps in
+``session.StatCheckedZipImporter``, which re-reads an archive only when
+its stat changed, so only a worker's first task pays it; the same 16
+calls then took 3-8 ms.
 
 Run it standalone:
     spark-submit --py-files quarrycore_spark.zip -m quarrycore_spark.plans.pipeline \

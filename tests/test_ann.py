@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from quarrycore_spark.operators import ann
 from quarrycore_spark.operators.ann import ann_topk, ivf_probes, ivf_topk
 
 DIM = 64
@@ -158,6 +159,30 @@ def test_ann_topk_query_cap_raises(spark):
     emb = _skewed_embeddings(spark, n=30)
     with pytest.raises(RuntimeError, match="query vectors"):
         ann_topk(emb, stride=1, max_queries=10).count()
+
+
+@pytest.mark.parametrize(
+    "kwargs,cent_cap,queries,centroids",
+    [
+        (dict(stride=1, cent_stride=31, max_queries=10), 200_000,
+         "30 (cap 10, stride=1)", "1 (cap 200000, cent_stride=31)"),
+        (dict(stride=50, cent_stride=1), 10,
+         "1 (cap 200000, stride=50)", "30 (cap 10, cent_stride=1)"),
+    ],
+    ids=["queries-over", "centroids-over"],
+)
+def test_ivf_topk_cap_error_gives_both_classes(
+    spark, monkeypatch, kwargs, cent_cap, queries, centroids
+):
+    """Whichever class is over its cap, the error reports both classes'
+    collected counts against their caps and strides."""
+    monkeypatch.setattr(ann, "MAX_BROADCAST_CENTROIDS", cent_cap)
+    emb = _skewed_embeddings(spark, n=30)
+    with pytest.raises(RuntimeError) as err:
+        ivf_topk(emb, **kwargs)
+    msg = str(err.value)
+    assert f"query vectors: {queries}" in msg
+    assert f"centroids: {centroids}" in msg
 
 
 def test_ann_topk_handles_batch_smaller_than_k(spark):

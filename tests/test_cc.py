@@ -5,10 +5,11 @@ from __future__ import annotations
 import random
 
 import networkx as nx
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from quarrycore_spark.operators.cc import connected_components
+from quarrycore_spark.operators.cc import _labels, connected_components
 
 
 def _random_graph(seed: int, n: int, m: int):
@@ -185,3 +186,24 @@ def test_cc_converges_logarithmically(spark, name, edges, n):
     assert 0 < cc_mod.LAST_ITERATIONS <= bound, (
         f"{name}: {cc_mod.LAST_ITERATIONS} iterations > O(log n) bound {bound}"
     )
+
+
+def _arrow_frame(spark, **cols):
+    return spark.createDataFrame(
+        pa.table({k: pa.array(v, pa.int64()) for k, v in cols.items()})
+    )
+
+
+def test_cc_small_graph_jobs(spark, spark_jobs):
+    """The union-find path runs the bounded edge collect and the label join,
+    and nothing else: its roots frame is built in the JVM, not from a
+    parallelized Python list, whose evaluation would add jobs."""
+    n, edges = _random_graph(5, 60, 40)
+    edf = _arrow_frame(spark, u=[u for u, _ in edges], v=[v for _, v in edges])
+    vdf = spark.range(n)
+    state = edf.select("u", "v").filter(F.col("u") != F.col("v")).distinct()
+    collect_jobs = spark_jobs(lambda: state.limit(100_001).collect())
+    roots = _arrow_frame(spark, u=list(range(n)), v=[0] * n)
+    join_jobs = spark_jobs(lambda: _labels(roots, vdf).collect())
+    jobs = spark_jobs(lambda: connected_components(edf, vdf).collect())
+    assert jobs == collect_jobs + join_jobs
