@@ -24,6 +24,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from quarrycore_spark.operators._kernel_log import kernel_span
+
 _SCRIPT = re.compile(r"<script\b[^>]*>.*?</script\s*>", re.I | re.S)
 _STYLE = re.compile(r"<style\b[^>]*>.*?</style\s*>", re.I | re.S)
 _COMMENT = re.compile(r"<!--.*?-->", re.S)
@@ -485,45 +487,40 @@ def extract_pages(
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-        import os as _os
-        import time as _time
 
-        _klog = _os.environ.get("SPARK_GRAFT_KERNEL_LOG")
         for pdf in batches:
-            _t0 = _time.time() if _klog else 0.0
-            hashes, extracted, titles, tiers, quality, errors = [], [], [], [], [], []
-            for url, raw, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
-                try:
-                    # decode once, strip script/style/comments once — the
-                    # canonicalizer and all three cascade tiers share the
-                    # same pre-stripped page (same output, ~half the
-                    # full-page regex passes per doc)
-                    s = raw if isinstance(raw, str) else decode_html(raw)
-                    pre = _strip_ssc(s)
-                    c = canonicalize_html(s, _pre_stripped=pre)
-                    t, tier, q, accepted = cascade_extract(
-                        s, url=url, lang=lang,
-                        threshold_scaled=cascade_threshold,
-                        overrides=domain_overrides,
-                        _pre_stripped=pre,
-                    )
-                    ti = extract_title(s)
-                    err = None if accepted or not t else "quality_gate"
-                except Exception as e:  # noqa: BLE001 — dead-letter, not crash
-                    c, t, ti, tier, q = "", "", None, "", 0
-                    err = f"{type(e).__name__}: {e}"
-                # sha256 of canonical text computed HERE so the canonical
-                # text itself (≈ the whole page) never leaves the stage —
-                # downstream frames stay slim (same hex as F.sha2(..., 256))
-                hashes.append(hashlib.sha256(c.encode("utf-8")).hexdigest())
-                extracted.append(t)
-                titles.append(ti)
-                tiers.append(tier)
-                quality.append(q)
-                errors.append(err)
-            if _klog:
-                with open(f"{_klog}.ext.{_os.getpid()}", "a") as f:
-                    f.write(f"{len(pdf)} {_time.time() - _t0:.4f}\n")
+            with kernel_span("ext", len(pdf)):
+                hashes, extracted, titles, tiers, quality, errors = [], [], [], [], [], []
+                for url, raw, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
+                    try:
+                        # decode once, strip script/style/comments once —
+                        # the canonicalizer and all three cascade tiers
+                        # share the same pre-stripped page (same output,
+                        # ~half the full-page regex passes per doc)
+                        s = raw if isinstance(raw, str) else decode_html(raw)
+                        pre = _strip_ssc(s)
+                        c = canonicalize_html(s, _pre_stripped=pre)
+                        t, tier, q, accepted = cascade_extract(
+                            s, url=url, lang=lang,
+                            threshold_scaled=cascade_threshold,
+                            overrides=domain_overrides,
+                            _pre_stripped=pre,
+                        )
+                        ti = extract_title(s)
+                        err = None if accepted or not t else "quality_gate"
+                    except Exception as e:  # noqa: BLE001 — dead-letter, not crash
+                        c, t, ti, tier, q = "", "", None, "", 0
+                        err = f"{type(e).__name__}: {e}"
+                    # sha256 of canonical text computed HERE so the
+                    # canonical text itself (≈ the whole page) never leaves
+                    # the stage — downstream frames stay slim (same hex as
+                    # F.sha2(..., 256))
+                    hashes.append(hashlib.sha256(c.encode("utf-8")).hexdigest())
+                    extracted.append(t)
+                    titles.append(ti)
+                    tiers.append(tier)
+                    quality.append(q)
+                    errors.append(err)
             yield pd.DataFrame(
                 {
                     "url": pdf["url"],

@@ -10,8 +10,7 @@ Decode status (see multimodal/codecs.py): WAV, uncompressed BMP and binary
 PPM decode FOR REAL with stdlib+numpy kernels (samples/pixels → features +
 64-bit perceptual dHash). Compressed formats (JPEG/PNG/MP4/…) require codec
 libraries absent from this container and flow to the `decode_error`
-dead-letter column; `_fake_decode_features` remains available for
-plumbing tests that want format-independent determinism.
+dead-letter column.
 """
 
 from __future__ import annotations
@@ -36,16 +35,6 @@ FEATURE_SCHEMA = (
 _FEATURE_DIM = 16
 
 
-def _fake_decode_features(payload: bytes, dim: int = _FEATURE_DIM) -> np.ndarray:
-    """DETERMINISTIC FAKE for the decode+embed step: a real deployment
-    plugs a codec + model here (e.g. PIL decode → CLIP embed). The fake
-    derives `dim` floats from the sha256 of the payload so tests are
-    stable and content-sensitive."""
-    d = hashlib.sha256(payload).digest()
-    raw = np.frombuffer((d * ((4 * dim) // len(d) + 1))[: 4 * dim], dtype=np.uint32)
-    return (raw.astype(np.float64) / 2**32).astype(np.float32)
-
-
 def real_decode(payload: bytes, mime: str) -> dict:
     """Real decode entry point: WAV/BMP/PPM decode natively
     (multimodal/codecs.py); other formats raise UnsupportedMediaError
@@ -55,7 +44,7 @@ def real_decode(payload: bytes, mime: str) -> dict:
     return decode_media(payload, mime)
 
 
-def extract_media_features(media: DataFrame, use_fake: bool = True) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """media(media_id, kind, payload, meta) → per-item features.
 
     Arrow-batched; per-item failures go to `decode_error` (dead-letter
@@ -64,9 +53,8 @@ def extract_media_features(media: DataFrame, use_fake: bool = True) -> DataFrame
     byte-sized scan gave fewer (no-op at scale); for very heterogeneous
     media, repartition by size bucket first so batches have uniform cost.
 
-    use_fake=True: format-independent deterministic features (plumbing
-    tests). use_fake=False: REAL decode for WAV/BMP/PPM (features + 64-bit
-    perceptual dHash for images); unsupported formats dead-letter.
+    WAV/BMP/PPM decode for real (features + 64-bit perceptual dHash for
+    images); unsupported formats dead-letter.
     """
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -78,16 +66,12 @@ def extract_media_features(media: DataFrame, use_fake: bool = True) -> DataFrame
             for payload, mime in zip(pdf["payload"], mimes):
                 raw = bytes(payload) if payload is not None else b""
                 try:
-                    if use_fake:
-                        feats.append(_fake_decode_features(raw))
-                        phashes.append(None)
-                    else:
-                        out = real_decode(raw, mime or "")
-                        f = out["feature"]
-                        pad = np.zeros(_FEATURE_DIM, dtype=np.float32)
-                        pad[: min(len(f), _FEATURE_DIM)] = f[:_FEATURE_DIM]
-                        feats.append(pad)
-                        phashes.append(out["phash"])
+                    out = real_decode(raw, mime or "")
+                    f = out["feature"]
+                    pad = np.zeros(_FEATURE_DIM, dtype=np.float32)
+                    pad[: min(len(f), _FEATURE_DIM)] = f[:_FEATURE_DIM]
+                    feats.append(pad)
+                    phashes.append(out["phash"])
                     n_bytes.append(len(raw))
                     digests.append(hashlib.sha256(raw).hexdigest())
                     errs.append(None)

@@ -1,93 +1,53 @@
-"""Persist-tracking for operator-internal cached intermediates.
+"""The one owner of persisted frames, per Spark application.
 
-Several operators persist exploded intermediate frames (band/gram tables)
-because the cap filter and both self-join sides consume them; the frames are
-internal, so callers can't unpersist them by reference. Operators register
-each persist here; long-lived sessions (the pipeline after a stage
-materializes, a service between registry runs) call ``release_tracked()`` to
-unpersist the backlog. Unpersisting is always safe — a later action merely
+One owner does both memoisation and tracking. ``memo(spark, key, build)``
+persists ``build()`` once per (application, key) and hands the same frame
+to every later caller, so queries that share an intermediate (the
+registry's signature frame) compute it once. ``track(df)`` persists an
+operator-internal frame (band/gram tables that the cap filter and both
+self-join sides consume) that callers cannot unpersist by reference.
+``release_tracked(spark)`` unpersists both kinds for that session's
+application. Unpersisting is always safe — a later action merely
 recomputes — so eager release never affects correctness, only warmth.
 
-Tracked frames are keyed by the owning application's applicationId (same
-discipline as plans/registry._SIG_CACHE): ``release_tracked()`` called
-from one APPLICATION cannot unpersist frames a concurrently running
-pipeline in another application still needs, and a stopped application's
-entries are dropped rather than accumulating. The isolation unit is the
-application, not the SparkSession — sessions sharing one SparkContext
-share an applicationId and therefore one tracked pool, which matches
-Spark's storage model (persisted blocks live in the shared context).
+Frames are keyed by the owning application's applicationId, never by
+``id(spark)``, which CPython can reuse. A release from one application
+cannot unpersist frames a pipeline in another application still needs.
+Sessions sharing one SparkContext share an applicationId and therefore
+one pool, which matches Spark's storage model (persisted blocks live in
+the shared context).
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
+from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_TRACKED: dict[str, list[DataFrame]] = defaultdict(list)
+_FRAMES: dict[str, dict[Hashable, DataFrame]] = defaultdict(dict)
 
 
-def _app_id(df_or_spark) -> str:
-    spark = (
-        df_or_spark
-        if isinstance(df_or_spark, SparkSession)
-        else df_or_spark.sparkSession
-    )
-    return spark.sparkContext.applicationId
+def memo(
+    spark: SparkSession, key: Hashable, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The persisted frame held under key for spark's application, built
+    and persisted on first use."""
+    frames = _FRAMES[spark.sparkContext.applicationId]
+    if key not in frames:
+        frames[key] = build().persist()
+    return frames[key]
 
 
 def track(df: DataFrame) -> DataFrame:
-    """Persist df and remember it for a later bulk release."""
-    _TRACKED[_app_id(df)].append(df.persist())
-    return df
+    """Persist df and hold it until the next release (an anonymous memo)."""
+    return memo(df.sparkSession, object(), lambda: df)
 
 
-def release_tracked(spark: SparkSession | None = None) -> int:
-    """Unpersist every frame tracked for the given session's application
-    (the active session's when omitted). Returns the number released.
-
-    When no session is given AND none is active in this thread, nothing
-    is unpersisted — the call degrades to housekeeping (dropping
-    bookkeeping for stopped applications) because without an application
-    identity any unpersist could cold-cache a concurrently running
-    pipeline, which the module contract forbids."""
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    if spark is None:
-        # No session active in THIS thread — the caller cannot name an
-        # application, so honoring the module contract ("release from one
-        # application cannot unpersist frames another running application
-        # still needs") means this branch must NOT touch live
-        # applications' frames. It is housekeeping only: drop bookkeeping
-        # entries whose application has stopped (their persisted blocks
-        # are already gone with the context); live applications keep
-        # their frames tracked AND persisted. Returns 0 — nothing is
-        # actually unpersisted here.
-        for key in list(_TRACKED):
-            keep: list[DataFrame] = []
-            for df in _TRACKED[key]:
-                try:
-                    sc = df.sparkSession.sparkContext
-                    if sc._jsc is not None and not sc._jsc.sc().isStopped():
-                        keep.append(df)
-                except Exception:
-                    pass  # application stopped mid-check: drop the entry
-            if keep:
-                _TRACKED[key] = keep
-            else:
-                _TRACKED.pop(key)
-        return 0
-    try:
-        key = _app_id(spark)
-    except Exception:  # session stopped mid-call
-        _TRACKED.clear()
-        return 0
-    released = 0
-    frames = _TRACKED.pop(key, [])
-    for df in frames:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
-        released += 1
-    return released
+def release_tracked(spark: SparkSession) -> int:
+    """Unpersist and forget every frame held for spark's application.
+    Returns the number released."""
+    frames = _FRAMES.pop(spark.sparkContext.applicationId, {})
+    for df in frames.values():
+        df.unpersist()
+    return len(frames)

@@ -46,14 +46,14 @@ def _planned_partitions(df: DataFrame) -> int | None:
             return None
 
 
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Ensure at least min_partitions (default: defaultParallelism)
-    partitions ahead of a CPU-bound kernel; no-op when already wider.
+def spread(df: DataFrame) -> DataFrame:
+    """Ensure at least defaultParallelism partitions ahead of a CPU-bound
+    kernel; no-op when already wider.
     Streaming frames pass through untouched (micro-batch partitioning is
     the source's concern, and `.rdd` is illegal on a streaming plan)."""
     if df.isStreaming:
         return df
-    par = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     n = _planned_partitions(df)
     if n is None:
         n = df.rdd.getNumPartitions()

@@ -25,11 +25,6 @@ from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
-# Iterations the last distributed star loop took (test instrumentation —
-# the O(log n) convergence guard in tests/test_cc.py reads it; -1 = the
-# union-find or resume short-circuit path answered without iterating).
-LAST_ITERATIONS = -1
-
 # 31-bit modulus: per-edge term <= 32*2^31 and the sum stays far inside
 # int64 even at 10^9 edges; ids may be full-range (negative) xxhash64 values,
 # hence pmod.
@@ -117,8 +112,6 @@ def connected_components(
     manifest without the identity) is ignored with a warning and the loop
     restarts from iteration 0 instead of silently resuming wrong state.
     """
-    global LAST_ITERATIONS
-    LAST_ITERATIONS = -1
     spark = edges.sparkSession
     start_iter = 0
     state = edges.select("u", "v").filter(F.col("u") != F.col("v")).distinct()
@@ -161,6 +154,7 @@ def connected_components(
                 "0 instead of resuming stale state", manifest_path,
             )
     converged = False
+    iterations = 0
     for it in range(start_iter, max_iter):
         # size the iteration to the edge count: a dup-pair graph is tiny
         # relative to the corpus, and 32-task jobs over a few thousand
@@ -199,10 +193,11 @@ def connected_components(
                 )
             os.replace(tmp, manifest_path)  # atomic, like the reference's
             # checkpoint writes (utils/atomic.py)
-        LAST_ITERATIONS = it - start_iter + 1
+        iterations += 1
         if converged:
             break
         prev_sum = cur
+    log.info("connected_components: %d star iterations", iterations)
     if not converged:
         # Non-star state can carry several rows per vertex; min-aggregate so
         # the output stays one row per doc_id instead of silently duplicating.

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 
 from quarrycore_spark.config import DEFAULT_CONFIG, MERSENNE_31, DedupConfig
 from quarrycore_spark.extraction.canonical import split_is_ws_safe
+from quarrycore_spark.operators._kernel_log import kernel_span
 
 _WS = re.compile(r"\s+", re.ASCII)
 
@@ -443,31 +444,24 @@ def with_signatures(
     b = np.array([p[1] for p in cfg.minhash_perms], dtype=np.int64)
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os as _os
-        import time as _time
-
-        _klog = _os.environ.get("SPARK_GRAFT_KERNEL_LOG")
         for pdf in batches:
-            _t0 = _time.time() if _klog else 0.0
             n = len(pdf)
-            texts = pdf[text_col].astype(str).tolist()
-            if family == "poly":
-                ch, sig_m, bands_m, sim = _batch_signatures_poly(texts, cfg, a, b)
-                sig = list(sig_m.astype(np.int32))
-                bands = list(bands_m.astype(np.int32))
-            else:
-                ch = [None] * n
-                sig = [None] * n
-                bands = [None] * n
-                sim = np.empty(n, dtype=np.int64)
-                for j, text in enumerate(texts):
-                    c, s, bd, sm = doc_signature(text, cfg, a, b, family)
-                    ch[j], sig[j], bands[j], sim[j] = (
-                        c, s.astype(np.int32), bd.astype(np.int32), sm,
-                    )
-            if _klog:
-                with open(f"{_klog}.sig.{_os.getpid()}", "a") as f:
-                    f.write(f"{n} {_time.time() - _t0:.4f} {_t0:.4f}\n")
+            with kernel_span("sig", n):
+                texts = pdf[text_col].astype(str).tolist()
+                if family == "poly":
+                    ch, sig_m, bands_m, sim = _batch_signatures_poly(texts, cfg, a, b)
+                    sig = list(sig_m.astype(np.int32))
+                    bands = list(bands_m.astype(np.int32))
+                else:
+                    ch = [None] * n
+                    sig = [None] * n
+                    bands = [None] * n
+                    sim = np.empty(n, dtype=np.int64)
+                    for j, text in enumerate(texts):
+                        c, s, bd, sm = doc_signature(text, cfg, a, b, family)
+                        ch[j], sig[j], bands[j], sim[j] = (
+                            c, s.astype(np.int32), bd.astype(np.int32), sm,
+                        )
             yield pd.DataFrame(
                 {
                     "doc_id": pdf[id_col].values,

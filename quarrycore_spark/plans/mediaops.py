@@ -118,7 +118,7 @@ def _spark_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         phash_near_dup_pairs,
     )
 
-    feats = extract_media_features(_media_frame(spark, sf_dir), use_fake=False)
+    feats = extract_media_features(_media_frame(spark, sf_dir))
     return phash_near_dup_pairs(
         feats, hamming_max=HAMMING_MAX, class_cap=CLASS_CAP
     ).select("a_id", "b_id", "hamming")

@@ -129,11 +129,6 @@ def _stage(
     # read back with the schema just written: schema inference would run
     # one Spark job per stage to open a footer the driver already knows
     df = spark.read.schema(df.schema).parquet(path)
-    # drop operator-internal persisted intermediates now that the stage
-    # output is materialized — keeps executor storage flat across stages
-    from quarrycore_spark.operators._cache import release_tracked
-
-    release_tracked(spark)
     man["stages"][name] = {
         "path": path,
         "rows": rows,

@@ -18,6 +18,8 @@ from quarrycore_spark.config import DEFAULT_CONFIG as CFG
 from quarrycore_spark.config import LSH_BUCKET_CAP
 from quarrycore_spark.functions import dialect as D
 from quarrycore_spark.functions.dialect import DUCKDB, SPARK
+from quarrycore_spark.operators._cache import memo, release_tracked, track
+from quarrycore_spark.operators._partitioning import spread
 from quarrycore_spark.plans import prelude as P
 from quarrycore_spark.sources.tables import load
 
@@ -29,15 +31,16 @@ class Query:
     sql: Callable[[str], str] | None = None  # dialect -> SQL text
     spark_fn: Callable[[SparkSession, str], DataFrame] | None = None
     tables: tuple = ("documents",)
-    # Tables whose scan should be repartitioned across the cluster before
-    # the SQL plan is built (optimization guide §2.5: the driver's test
-    # parquet is ONE file with ONE row group, so a scan cannot split and a
-    # CPU-dense projection runs on a single core; `spread` is a no-op once
-    # the scan already has >= defaultParallelism splits, i.e. at any real
-    # corpus scale). Only set on queries whose per-row work dwarfs the
-    # one-time ~MB-scale exchange AND whose semantics are
-    # partition-insensitive (all registry outputs are order-insensitive
-    # sets; window/sample rules key on column values, never partition ids).
+    # Tables whose views run_spark re-registers repartitioned across the
+    # cluster before it runs the SQL (a test table is ONE parquet file with
+    # ONE row group, so a scan cannot split and a CPU-dense projection
+    # runs on a single core; `spread` is a no-op once the scan already has
+    # >= defaultParallelism splits, i.e. at any real corpus scale). Only
+    # set on queries whose per-row work dwarfs the one-time ~MB-scale
+    # exchange AND whose semantics are partition-insensitive (all registry
+    # outputs are order-insensitive sets; window/sample rules key on column
+    # values, never partition ids). The spread views stay registered: every
+    # run_spark first re-registers its tables' plain scans through load().
     spread: tuple = ()
 
     def run_spark(self, spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,20 +50,8 @@ class Query:
         dfs = load(spark, sf_dir, *self.tables)
         if self.spark_fn is not None:
             return self.spark_fn(spark, sf_dir)
-        if self.spread:
-            from quarrycore_spark.operators._partitioning import spread
-
-            # swap the named views for repartitioned ones only while the
-            # plan is analyzed (spark.sql resolves views eagerly), then
-            # restore so other queries see the plain scan again
-            try:
-                for t in self.spread:
-                    spread(dfs[t]).createOrReplaceTempView(t)
-                df = spark.sql(self.sql(SPARK))
-            finally:
-                for t in self.spread:
-                    dfs[t].createOrReplaceTempView(t)
-            return df
+        for t in self.spread:
+            spread(dfs[t]).createOrReplaceTempView(t)
         return spark.sql(self.sql(SPARK))
 
     def oracle(self) -> str | None:
@@ -202,39 +193,22 @@ register(Query("dedup_metrics", "D17: corpus-level dedup counters", _dedup_metri
 # sourced from config.LSH_BUCKET_CAP so Spark and oracle can never drift
 # (VERDICT r5 #3 — imported above, referenced by every capped SQL below).
 
-_SIG_CACHE: dict = {}
-
 
 def _sigs(spark: SparkSession, sf_dir: str):
     """Signature DataFrame for `documents` at sf_dir, persisted & memoized
-    per session so the stage-2/3 queries share one computation.
-
-    Keyed by applicationId (stable for the session's lifetime — unlike
-    id(spark), which CPython can reuse after GC). Long-lived sessions call
-    release_sigs() to unpersist."""
+    per application so the stage-2/3 queries share one computation.
+    Long-lived sessions call release_tracked() to unpersist it."""
     from quarrycore_spark.operators.signatures import with_signatures
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIG_CACHE:
-        docs = load(spark, sf_dir, "documents")["documents"]
-        _SIG_CACHE[key] = with_signatures(docs, CFG).persist()
-    return _SIG_CACHE[key]
+    return memo(
+        spark,
+        ("sigs", sf_dir),
+        lambda: with_signatures(load(spark, sf_dir, "documents")["documents"], CFG),
+    )
 
 
-def release_sigs(spark: SparkSession | None = None) -> int:
-    """Unpersist and evict memoized signature frames — all of them, or only
-    the given session's. Returns the number of entries released."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    released = 0
-    for key in list(_SIG_CACHE):
-        if app is None or key[0] == app:
-            df = _SIG_CACHE.pop(key)
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped — eviction is enough
-            released += 1
-    return released
+# kept for callers that release the signature memo by its old name
+release_sigs = release_tracked
 
 
 def _sig_prelude(dialect: str, table: str = "documents") -> str:
@@ -435,8 +409,6 @@ def _spark_near_dup_recall_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tracked persist: verified_pairs references the signature frame four
     # times (band explode × both self-join sides + both verify lookups);
     # without it the MapInPandas signature pass runs 4× in the plan
-    from quarrycore_spark.operators._cache import track
-
     sigs = track(with_signatures(seeded, CFG))
     ver = verified_pairs(sigs, CFG, LSH_BUCKET_CAP)
     injected = eligible.select(F.col("doc_id").alias("orig_id"))
@@ -602,7 +574,6 @@ def _spark_simhash_recall_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     standalone computation, and the cached frame lacks the injected rows)."""
     from pyspark.sql import functions as F
 
-    from quarrycore_spark.operators._cache import track
     from quarrycore_spark.operators.signatures import with_signatures
     from quarrycore_spark.operators.simhash import simhash_pairs
 

@@ -18,8 +18,6 @@ import zipimport
 from pyspark.sql import SparkSession
 
 
-_PYFILES_SENT: set = set()
-
 # Allocator tuning for the Python workers (the signature/extraction hot
 # path). The per-batch work frees almost everything it allocates; with
 # default settings that memory is returned to the OS (pymalloc unmaps
@@ -118,17 +116,17 @@ def ensure_py_files(spark: SparkSession) -> None:
     (the grading harness, spark-submit without --py-files): the driver
     process can import the package from the repo path, but executor Python
     workers have their own sys.path. Equivalent to
-    `spark-submit --py-files quarrycore_spark.zip`.
+    `spark-submit --py-files quarrycore_spark.zip`. The context's file
+    list says whether this application already has the zip.
     """
-    key = id(spark)
-    if key in _PYFILES_SENT:
-        return
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(
         "/tmp", f"quarrycore_spark_{os.getpid()}.zip"
     )
+    if f"file:{zip_path}" in spark.sparkContext.listFiles:
+        return
     if not os.path.exists(zip_path):
         with zipfile.ZipFile(zip_path, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
@@ -140,7 +138,6 @@ def ensure_py_files(spark: SparkSession) -> None:
                         )
                         zf.write(full, rel)
     spark.sparkContext.addPyFile(zip_path)
-    _PYFILES_SENT.add(key)
 
 
 def get_spark(

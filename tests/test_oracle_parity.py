@@ -146,22 +146,20 @@ def test_release_discipline_storage_stable(spark):
     """Three consecutive full dedup-registry runs with release between them
     leave zero persisted RDDs — no storage leak in a long-lived session."""
     from quarrycore_spark.operators._cache import release_tracked
-    from quarrycore_spark.plans.registry import REGISTRY, release_sigs
+    from quarrycore_spark.plans.registry import REGISTRY
 
     def persisted_count():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
     # other tests in the session may hold localCheckpoint RDDs; what must
     # stay flat is the DELTA added by repeated registry runs
-    release_tracked()
-    release_sigs(spark)
+    release_tracked(spark)
     baseline = persisted_count()
     for _ in range(3):
         for name in ("minhash_verified_pairs", "simhash_pairs", "dedup_labels"):
             REGISTRY[name].run_spark(spark, SF_CORRECT).count()
         assert persisted_count() > baseline  # the run does persist
-        release_tracked()
-        released = release_sigs(spark)
+        released = release_tracked(spark)
         assert released >= 1
         assert persisted_count() == baseline, "persisted RDDs leaked after release"
 

@@ -20,20 +20,31 @@ def test_spread_is_job_free_over_broadcast_join(spark, spark_jobs, tmp_path):
     ids = F.broadcast(scan.filter("doc_id % 3 = 0").groupBy("doc_id").count().select("doc_id"))
     survivors = ids.join(scan.select("doc_id", "text"), "doc_id")
 
+    par = spark.sparkContext.defaultParallelism
     for df in (scan, survivors):
         planned = []
         assert spark_jobs(lambda: planned.append(_planned_partitions(df))) == 0
         assert planned[0] == df.rdd.getNumPartitions() == 3
         spread_out = []
-        assert spark_jobs(lambda: spread_out.append(spread(df, 8))) == 0
-        assert spread_out[0].rdd.getNumPartitions() == 8
-        assert spread(df, 2) is df
+        assert spark_jobs(lambda: spread_out.append(spread(df))) == 0
+        assert spread_out[0].rdd.getNumPartitions() == par
+
+    # a scan already as wide as the cluster passes through, also job-free
+    wide_path = str(tmp_path / "wide")
+    scan.repartition(par).write.parquet(wide_path)
+    wide = spark.read.parquet(wide_path)
+    kept = []
+    assert spark_jobs(lambda: kept.append(spread(wide))) == 0
+    assert kept[0] is wide and wide.rdd.getNumPartitions() == par
 
 
 def test_spread_falls_back_past_an_exchange(spark):
     """A frame whose count an exchange fixes keeps the `.rdd` decision."""
     agg = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
     assert _planned_partitions(agg) is None
-    want = agg.rdd.getNumPartitions()
-    assert spread(agg, want + 1).rdd.getNumPartitions() == want + 1
-    assert spread(agg, want) is agg
+    par = spark.sparkContext.defaultParallelism
+    assert agg.rdd.getNumPartitions() < par
+    wide = spread(agg)
+    assert _planned_partitions(wide) is None
+    assert wide.rdd.getNumPartitions() == par
+    assert spread(wide) is wide

@@ -124,35 +124,39 @@ def test_foreach_batch_cross_batch_dedup(spark, pages_parquet, tmp_path):
 
 
 def test_multimodal_features_and_dedup(spark):
+    """Real payloads end to end: an identical BMP pair dedups to one
+    canonical, the WAV decodes, and a null payload dead-letters."""
     from quarrycore_spark.multimodal.stubs import (
+        MEDIA_SCHEMA,
         exact_media_dedup,
         extract_media_features,
         real_decode,
     )
+    from tests.test_codecs import make_bmp, make_wav, random_img
 
+    bmp = bytearray(make_bmp(random_img(3, 16, 16)))
     data = [
-        (1, "image", bytearray(b"PNG-fake-bytes-1"), ("image/png", 4, 4, None)),
-        (2, "image", bytearray(b"PNG-fake-bytes-1"), ("image/png", 4, 4, None)),  # dup
-        (3, "audio", bytearray(b"WAV-fake-bytes-2"), ("audio/wav", None, None, 1200)),
+        (1, "image", bmp, ("image/bmp", 16, 16, None)),
+        (2, "image", bmp, ("image/bmp", 16, 16, None)),  # dup
+        (3, "audio", bytearray(make_wav()), ("audio/wav", None, None, 100)),
         (4, "video", None, ("video/mp4", 16, 16, 5000)),  # null payload
     ]
-    media = spark.createDataFrame(
-        data,
-        "media_id long, kind string, payload binary, "
-        "meta struct<mime:string,width:int,height:int,duration_ms:int>",
-    )
-    feats = extract_media_features(media).collect()
-    by_id = {r["media_id"]: r for r in feats}
+    feats = extract_media_features(spark.createDataFrame(data, MEDIA_SCHEMA))
+    by_id = {r["media_id"]: r for r in feats.collect()}
     assert by_id[1]["sha256"] == by_id[2]["sha256"]
     assert by_id[1]["feature"] == by_id[2]["feature"]
+    assert by_id[1]["phash"] == by_id[2]["phash"] is not None
     assert by_id[1]["sha256"] != by_id[3]["sha256"]
     assert len(by_id[1]["feature"]) == 16
-    assert all(r["decode_error"] is None for r in feats)
+    assert by_id[1]["decode_error"] is None
+    assert by_id[3]["decode_error"] is None
+    assert any(abs(x) > 0 for x in by_id[3]["feature"])
+    assert by_id[4]["decode_error"] is not None and by_id[4]["sha256"] == ""
 
-    dedup = {r["sha256"]: r for r in exact_media_dedup(
-        extract_media_features(media)).collect()}
+    dedup = {r["sha256"]: r for r in exact_media_dedup(feats).collect()}
     assert dedup[by_id[1]["sha256"]]["group_size"] == 2
     assert dedup[by_id[1]["sha256"]]["canonical_media_id"] == 1
+    assert len(dedup) == 2  # the BMP class and the WAV; dead letters drop
 
     from quarrycore_spark.multimodal.codecs import UnsupportedMediaError
 
@@ -213,7 +217,7 @@ def test_real_decode_features_and_phash_pairs(spark):
 
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     feats = {r["media_id"]: r for r in
-             extract_media_features(media, use_fake=False).collect()}
+             extract_media_features(media).collect()}
     # identical pixels through two formats -> identical phash
     assert feats[1]["phash"] == feats[2]["phash"] is not None
     assert feats[1]["decode_error"] is None
@@ -227,7 +231,7 @@ def test_real_decode_features_and_phash_pairs(spark):
     pairs = {
         (r["a_id"], r["b_id"]): r["hamming"]
         for r in phash_near_dup_pairs(
-            extract_media_features(media, use_fake=False)
+            extract_media_features(media)
         ).collect()
     }
     assert pairs[(1, 2)] == 0

@@ -152,3 +152,17 @@ def test_spark_worker_zip_importers_are_stat_checked(spark):
         assert r["zips"] > 0  # pyspark.zip is on every worker's path
         assert r["stat_checked"] == r["zips"]
         assert r["reads"] == 0
+
+
+def test_ensure_py_files_ships_the_zip_once(spark):
+    """ensure_py_files asks the context whether the package zip has
+    shipped, so a second call adds it neither to the context's file list
+    nor to the workers' import path again."""
+    from quarrycore_spark.session import ensure_py_files
+
+    sc = spark.sparkContext
+    ensure_py_files(spark)
+    ensure_py_files(spark)
+    name = f"quarrycore_spark_{os.getpid()}.zip"
+    assert [f for f in sc.listFiles if f.endswith(name)] == [f"file:/tmp/{name}"]
+    assert sc._python_includes.count(name) == 1

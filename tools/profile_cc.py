@@ -8,6 +8,7 @@ Usage: python tools/profile_cc.py [n_edges] [n_vertices]
 
 from __future__ import annotations
 
+import logging
 import sys
 import tempfile
 import time
@@ -17,6 +18,21 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from quarrycore_spark.session import get_spark  # noqa: E402
+
+
+def _capture_iterations() -> list:
+    """Collect the star-iteration counts CC logs at INFO."""
+    got: list = []
+
+    def keep(record: logging.LogRecord) -> bool:
+        if "star iterations" in record.msg:
+            got.append(record.args[0])
+        return True
+
+    log = logging.getLogger("quarrycore_spark.operators.cc")
+    log.setLevel(logging.INFO)
+    log.addFilter(keep)
+    return got
 
 
 def main() -> None:
@@ -39,6 +55,7 @@ def main() -> None:
 
     from quarrycore_spark.operators import cc as cc_mod
 
+    logged = _capture_iterations()
     ckpt = tempfile.mkdtemp(prefix="cc_prof_")
     sc.setJobGroup("cc-run", "profiled cc")
     t0 = time.time()
@@ -48,7 +65,7 @@ def main() -> None:
     n_clusters = labels.select("cluster_id").distinct().count()
     wall = time.time() - t0
     jobs = sc.statusTracker().getJobIdsForGroup("cc-run")
-    iters = cc_mod.LAST_ITERATIONS
+    iters = logged[-1]
     print(
         f"edges={n_edges} verts={n_verts} clusters={n_clusters} "
         f"iters={iters} wall={wall:.1f}s jobs={len(jobs)} "

@@ -119,7 +119,8 @@ def main() -> None:
     )
     app_id = spark.sparkContext.applicationId
 
-    from quarrycore_spark.plans.registry import REGISTRY, release_sigs
+    from quarrycore_spark.operators._cache import release_tracked
+    from quarrycore_spark.plans.registry import REGISTRY
 
     tmp = tempfile.mkdtemp(prefix="qc_scale_probe_")
     result: dict = {"queries": {}, "base_sf": sf_dir}
@@ -141,7 +142,7 @@ def main() -> None:
                 rd1, wr1 = _shuffle_totals(app_id)
                 rows = df.count()  # untimed AND after the shuffle capture
                 # (the count re-execution must not inflate the deltas)
-                release_sigs(spark)  # drop the memoized signature frame
+                release_tracked(spark)  # drop memoized and tracked frames
                 rec = {
                     "wall_s": round(wall, 2), "rows": rows, "docs": n_docs,
                     "shuffle_read_mb": round((rd1 - rd0) / 1e6, 1),
