@@ -472,7 +472,6 @@ EXTRACT_SCHEMA = (
 def extract_pages(
     pages: DataFrame,
     cascade_threshold: int = 0,
-    domain_overrides: dict[str, tuple[str, ...]] | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, lang, ...) → extraction columns via the
     gated cascade (P6). The default threshold 0 accepts the first non-empty
@@ -503,7 +502,6 @@ def extract_pages(
                         t, tier, q, accepted = cascade_extract(
                             s, url=url, lang=lang,
                             threshold_scaled=cascade_threshold,
-                            overrides=domain_overrides,
                             _pre_stripped=pre,
                         )
                         ti = extract_title(s)

@@ -34,6 +34,12 @@ FEATURE_SCHEMA = (
 
 _FEATURE_DIM = 16
 
+# Band-bucket cap of the phash join. Its buckets hold DISTINCT hashes, not
+# media rows, so it is a different value from config.LSH_BUCKET_CAP (2⁵⁶
+# per-band diversity would be needed to approach it organically); the
+# oracle has no band join, so only the Spark side reads it.
+PHASH_BUCKET_CAP = 1000
+
 
 def real_decode(payload: bytes, mime: str) -> dict:
     """Real decode entry point: WAV/BMP/PPM decode natively
@@ -116,7 +122,6 @@ def exact_media_dedup(features: DataFrame) -> DataFrame:
 def phash_near_dup_pairs(
     features: DataFrame,
     hamming_max: int = 7,
-    bucket_cap: int = 1000,
     class_cap: int | None = None,
 ) -> DataFrame:
     """Perceptual near-dup image pairs: pigeonhole banding over the 64-bit
@@ -134,9 +139,8 @@ def phash_near_dup_pairs(
     Two deterministic caps bound the output (the same 2..cap discipline as
     every other LSH operator in this repo):
 
-    * ``bucket_cap`` — distinct-hash band buckets above it are dropped
-      (dominant-pattern noise; 2⁵⁶ per-band diversity would be needed to
-      approach it organically).
+    * ``PHASH_BUCKET_CAP`` — distinct-hash band buckets above it are
+      dropped by ``lsh.capped`` (dominant-pattern noise).
     * ``class_cap`` — OPT-IN (default None = uncapped all-pairs, the
       original contract; ADVICE r5 flagged a capped default as a silent
       semantic change for existing callers). When set, identical-phash
@@ -154,6 +158,7 @@ def phash_near_dup_pairs(
     from pyspark.sql import functions as F
 
     from quarrycore_spark.operators._cache import track
+    from quarrycore_spark.operators.lsh import capped
 
     # slim (media_id, phash) projection, persisted: four consumers below
     # (band explode, both class-join sides, within-class self-join) would
@@ -182,12 +187,7 @@ def phash_near_dup_pairs(
         .select("phash", F.posexplode(bands).alias("bi", "bv"))
         .select("phash", (F.col("bv") * n_bands + F.col("bi")).alias("bkey"))
     )
-    w = Window.partitionBy("bkey")
-    bkt = (
-        bx.withColumn("bsz", F.count(F.lit(1)).over(w))
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= bucket_cap))
-        .drop("bsz")
-    )
+    bkt = capped(bx, "bkey", "phash", PHASH_BUCKET_CAP)
     a, b = bkt.alias("a"), bkt.alias("b")
     hash_pairs = (
         a.join(

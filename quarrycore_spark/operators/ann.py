@@ -37,9 +37,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from quarrycore_spark import config
+from quarrycore_spark.operators.lsh import capped
 from quarrycore_spark.plans.vectorops import (
     ANN_K,
-    ANN_LSH_BUCKET_CAP,
     CENT_STRIDE,
     IVF_NPROBE,
     LSH_BANDS,
@@ -644,16 +645,14 @@ def lsh_band_signatures(emb: DataFrame) -> DataFrame:
     the exact shape the production path removed — so at scale it
     multiplies vector bytes by LSH_BANDS through the join's shuffle.
     It must NOT feed pair generation: ``ann_lsh_pairs`` uses
-    ``lsh_band_rows`` + the 2..cap filter on slim 24-byte rows, and only
+    ``lsh_band_rows`` + ``lsh.capped`` on slim 24-byte rows, and only
     joins vectors back to the surviving buckets."""
     return lsh_band_rows(emb).join(
         quantized_frame(emb).filter(F.col("na") > 0), "vec_id"
     )
 
 
-def ann_lsh_pairs(
-    emb: DataFrame, cos_pct: int = LSH_COS_PCT, cap: int = ANN_LSH_BUCKET_CAP
-) -> DataFrame:
+def ann_lsh_pairs(emb: DataFrame, cos_pct: int = LSH_COS_PCT) -> DataFrame:
     """Banded hyperplane LSH pairs, verified *inside each bucket* — the
     10^12-row scale shape: vectors are shuffled once to their (band, sig)
     buckets — 16 bands × 65,536 signatures (LSH_BANDS × 2^LSH_PLANES_PER_BAND)
@@ -662,22 +661,19 @@ def ann_lsh_pairs(
     pair sharing k bands is verified k times and deduped — cheaper than
     shuffling quantized vectors through a multi-million-row candidate join.
 
-    The 2..cap bucket-size filter (same guard as the text LSH,
-    operators/lsh.py band_buckets) is computed on SLIM (vec_id, band_idx,
-    band_sig) rows BEFORE any vector payload moves: most band rows are
-    bucket singletons (65,536 signatures per band) and die in the filter,
-    and only the survivors join the quantized vectors back — so the
-    explode never multiplies vector bytes through a shuffle, and a
-    dominant direction (all vectors near one axis) can never materialize
-    an O(bucket²) score matrix in one task: its mega-buckets are dropped
-    deterministically, identically in the Spark plan and the SQL oracle."""
+    The 2..cap bucket-size filter (``lsh.capped`` at
+    ``config.LSH_BUCKET_CAP``, the text LSH's guard) is computed on SLIM
+    (vec_id, band_idx, band_sig) rows BEFORE any vector payload moves:
+    most band rows are bucket singletons (65,536 signatures per band) and
+    die in the filter, and only the survivors join the quantized vectors
+    back — so the explode never multiplies vector bytes through a shuffle,
+    and a dominant direction (all vectors near one axis) can never
+    materialize an O(bucket²) score matrix in one task: its mega-buckets
+    are dropped deterministically, identically in the Spark plan and the
+    SQL oracle."""
     qv = quantized_frame(emb).filter(F.col("na") > 0)
-    wb = Window.partitionBy("band_idx", "band_sig")
-    surv = (
-        lsh_band_rows(emb)
-        .withColumn("bsz", F.count(F.lit(1)).over(wb))
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= cap))
-        .drop("bsz")
+    surv = capped(
+        lsh_band_rows(emb), ["band_idx", "band_sig"], "vec_id", config.LSH_BUCKET_CAP
     )
     sigs = surv.join(qv, "vec_id")
     thr = cos_pct * cos_pct

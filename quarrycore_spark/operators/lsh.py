@@ -11,7 +11,8 @@ Shuffle discipline (this is the shuffle-bound stage of the pipeline):
 * (band_idx, band_hash) is fused into ONE int64 key — band hashes are mod
   2³¹−1, so `band_hash * n_bands + band_idx` is injective and fits — which
   halves the join-key bytes crossing the wire;
-* the 2..cap bucket-size filter is a window count over the SAME partitioning
+* the 2..cap bucket-size filter (``capped``, the one owner of the bucket
+  cap for every capped stage) is a window count over the SAME partitioning
   the self-join needs, so Catalyst reuses one exchange for the filter and
   both join sides (one wide shuffle of the exploded rows total, vs a
   groupBy + join + self-join chain's three).
@@ -22,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from quarrycore_spark.config import LSH_BUCKET_CAP as DEFAULT_BUCKET_CAP
+from quarrycore_spark import config
 from quarrycore_spark.config import DEFAULT_CONFIG, DedupConfig
 
 # Fused-key multiplier: band_idx slots reserved per band_hash. Any banding
@@ -33,37 +34,48 @@ from quarrycore_spark.config import DEFAULT_CONFIG, DedupConfig
 _MAX_BANDS = 1024
 
 
-def band_buckets(
-    sigs: DataFrame,
-    cap: int = DEFAULT_BUCKET_CAP,
-    bands_col: str = "bands",
-) -> DataFrame:
-    """sigs(doc_id, bands) → (doc_id, bkey), only buckets with 2..cap
-    members (singleton buckets produce no pairs; mega-buckets are
-    boilerplate — dropped deterministically).
+def capped(df: DataFrame, keys: str | list[str], member: str, cap: int) -> DataFrame:
+    """The rows of `df` whose bucket (rows equal on `keys`) holds 2..cap
+    members: singleton buckets pair with nothing, and buckets above the cap
+    are boilerplate mega-buckets, dropped deterministically. Every capped
+    candidate stage calls this one rule.
 
-    bkey fuses (band_idx, band_hash) into one int64; the size filter is a
-    window count so the exchange it introduces is reused by the self-join.
+    The count is a window over the whole bucket, ordered by `member`, so a
+    self-join on `keys` reuses the window's exchange, and a later window
+    with the same partitioning and order reuses its sort."""
+    w = (
+        Window.partitionBy(keys)
+        .orderBy(member)
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    return (
+        df.withColumn("_bsz", F.count(F.lit(1)).over(w))
+        .filter((F.col("_bsz") >= 2) & (F.col("_bsz") <= cap))
+        .drop("_bsz")
+    )
+
+
+def band_buckets(sigs: DataFrame) -> DataFrame:
+    """sigs(doc_id, bands) → (doc_id, bkey), only buckets with 2..cap
+    members (``capped`` at ``config.LSH_BUCKET_CAP``).
+
+    bkey fuses (band_idx, band_hash) into one int64, so the cap's window
+    and the self-join share one exchange on it.
     """
     bx = sigs.select(
-        "doc_id", F.posexplode(bands_col).alias("band_idx", "band_hash")
+        "doc_id", F.posexplode("bands").alias("band_idx", "band_hash")
     ).select(
         "doc_id",
         # cast BEFORE the fold: band hashes arrive as int32 residues
         # (signatures.SIG_SCHEMA) and int32·1024 would wrap
         (F.col("band_hash").cast("long") * _MAX_BANDS + F.col("band_idx")).alias("bkey"),
     )
-    w = Window.partitionBy("bkey")
-    return (
-        bx.withColumn("bsz", F.count(F.lit(1)).over(w))
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= cap))
-        .drop("bsz")
-    )
+    return capped(bx, "bkey", "doc_id", config.LSH_BUCKET_CAP)
 
 
-def candidate_pairs(sigs: DataFrame, cap: int = DEFAULT_BUCKET_CAP) -> DataFrame:
+def candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Distinct (a_id, b_id, n_bands) candidate pairs from band collisions."""
-    bkt = band_buckets(sigs, cap)
+    bkt = band_buckets(sigs)
     a = bkt.alias("a")
     b = bkt.alias("b")
     return (
@@ -86,7 +98,6 @@ _AGREE = (
 def verified_pairs(
     sigs: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
-    cap: int = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """Candidates verified at signature agreement >= threshold.
 
@@ -94,7 +105,7 @@ def verified_pairs(
     reference's verification rule (minhash_lsh.py:162-181). Integer
     threshold: agree*100 >= num_perm * threshold_pct.
     """
-    cand = candidate_pairs(sigs, cap).select("a_id", "b_id")
+    cand = candidate_pairs(sigs).select("a_id", "b_id")
     sig_only = sigs.select("doc_id", "sig")
     joined = (
         cand.join(sig_only.withColumnRenamed("sig", "sig_a"), cand.a_id == sig_only.doc_id)

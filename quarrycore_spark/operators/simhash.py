@@ -7,17 +7,19 @@ bands of 15 bits ⇒ at least one band equal) and verified with
 bit_count(xor) — pure JVM column expressions, no UDF.
 
 Same shuffle discipline as operators/lsh.py: one fused int64 bucket key
-(band_val < 2¹⁵, so `band_val * n_bands + band_idx` is injective) and a
-window-count cap filter whose exchange the self-join reuses.
+(band_val < 2¹⁵, so `band_val * n_bands + band_idx` is injective) and the
+window-count cap filter (``lsh.capped``) whose exchange the self-join
+reuses.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from quarrycore_spark.config import LSH_BUCKET_CAP as DEFAULT_BUCKET_CAP
+from quarrycore_spark import config
 from quarrycore_spark.config import DEFAULT_CONFIG, DedupConfig
+from quarrycore_spark.operators.lsh import capped
 
 
 def simhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -40,19 +42,9 @@ def simhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFra
     )
 
 
-def simhash_pairs(
-    sigs: DataFrame,
-    cfg: DedupConfig = DEFAULT_CONFIG,
-    cap: int = DEFAULT_BUCKET_CAP,
-) -> DataFrame:
+def simhash_pairs(sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
     """(a_id, b_id, hamming) for pairs at Hamming distance <= hamming_max."""
-    w = Window.partitionBy("bkey")
-    bkt = (
-        simhash_bands(sigs, cfg)
-        .withColumn("bsz", F.count(F.lit(1)).over(w))
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= cap))
-        .drop("bsz")
-    )
+    bkt = capped(simhash_bands(sigs, cfg), "bkey", "doc_id", config.LSH_BUCKET_CAP)
     a = bkt.alias("a")
     b = bkt.alias("b")
     # The Hamming verify rides the join itself (post-join filter inside the

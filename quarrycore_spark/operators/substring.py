@@ -15,20 +15,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-
-DEFAULT_GRAM_CAP = 200
+from quarrycore_spark import config
+from quarrycore_spark.operators.lsh import capped
 
 _NORM = "lower(trim(regexp_replace(text, '\\\\s+', ' ')))"
-
-
-def _gram_hashes_expr(l_gram: int) -> str:
-    """Distinct md5-prefix hashes of every L-gram of normalized text."""
-    return (
-        f"case when length(nt) < {l_gram} then array(cast(conv(substring(md5(nt), 1, 15), 16, 10) as bigint)) "
-        f"else array_distinct(transform(sequence(0, length(nt) - {l_gram}), "
-        f"i -> cast(conv(substring(md5(substring(nt, i + 1, {l_gram})), 1, 15), 16, 10) as bigint))) end"
-    )
 
 
 def winnow_fingerprints(nt: str, k: int, w: int) -> np.ndarray:
@@ -50,23 +40,23 @@ def winnow_fingerprints(nt: str, k: int, w: int) -> np.ndarray:
 
 
 
-def _capped_bucket_pairs(grams: DataFrame, cap: int) -> DataFrame:
+def _capped_bucket_pairs(grams: DataFrame) -> DataFrame:
     """(a_id, b_id, shared_grams) over (doc_id, g) rows: every doc pair
     a_id < b_id sharing a gram bucket of 2..cap members, with the number of
     buckets they share — one wide shuffle of (doc_id, g) and ONE pass over
     it (same shuffle discipline as operators/lsh.py).
 
-    Both windows share one partitioning and sort (g, doc_id): the first
-    counts each bucket, so boilerplate buckets above the cap are dropped
-    before anything is collected; the second gives each member the
-    running list of the kept bucket's earlier (lower) doc_ids, bounded by
-    the cap. A self-join on g would run the gram kernel once per side."""
-    by_g = Window.partitionBy("g").orderBy("doc_id")
-    whole = by_g.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    lower = by_g.rowsBetween(Window.unboundedPreceding, -1)
+    Both windows share one partitioning and sort (g, doc_id): the first,
+    ``lsh.capped``, counts each bucket, so boilerplate buckets above
+    ``config.LSH_BUCKET_CAP`` are dropped before anything is collected; the
+    second gives each member the running list of the kept bucket's earlier
+    (lower) doc_ids, bounded by the cap. A self-join on g would run the
+    gram kernel once per side."""
+    lower = Window.partitionBy("g").orderBy("doc_id").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
     return (
-        grams.withColumn("gsz", F.count(F.lit(1)).over(whole))
-        .filter((F.col("gsz") >= 2) & (F.col("gsz") <= cap))
+        capped(grams, "g", "doc_id", config.LSH_BUCKET_CAP)
         .withColumn("lower", F.collect_list("doc_id").over(lower))
         .select(F.explode("lower").alias("a_id"), F.col("doc_id").alias("b_id"))
         .filter(F.col("a_id") < F.col("b_id"))
@@ -80,7 +70,6 @@ def winnow_doc_pairs(
     min_overlap: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cap: int = DEFAULT_GRAM_CAP,
 ) -> DataFrame:
     """Scale form of gram_doc_pairs: winnowing fingerprints instead of
     every-position grams (~w/2× fewer exploded rows, same >=min_overlap
@@ -110,7 +99,7 @@ def winnow_doc_pairs(
     grams = spread(docs.select(id_col, text_col)).mapInPandas(
         compute, schema="doc_id bigint, g bigint"
     )
-    return _capped_bucket_pairs(grams, cap)
+    return _capped_bucket_pairs(grams)
 
 
 def gram_doc_pairs(
@@ -118,16 +107,15 @@ def gram_doc_pairs(
     l_gram: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cap: int = DEFAULT_GRAM_CAP,
 ) -> DataFrame:
     """(a_id, b_id, shared_grams): doc pairs sharing >=1 common substring of
-    length >= l_gram. Grams occurring in more than `cap` docs are dropped
-    (boilerplate guard, deterministic).
+    length >= l_gram. Grams occurring in more than ``config.LSH_BUCKET_CAP``
+    docs are dropped (boilerplate guard, deterministic).
 
     Gram hashing runs in the batched md5 kernel (operators/md5grams.py) —
-    identical integers to the `_gram_hashes_expr` SQL (which remains the
-    DuckDB oracle), but C md5 over Arrow batches instead of an interpreted
-    transform() lambda."""
+    identical integers to the L-gram SQL of the DuckDB oracle
+    (``registry._substring_pairs_sql``), but C md5 over Arrow batches
+    instead of an interpreted transform() lambda."""
     from quarrycore_spark.operators._partitioning import spread
     from quarrycore_spark.operators.md5grams import window_hashes60
     from quarrycore_spark.operators.signatures import normalize_text
@@ -150,7 +138,7 @@ def gram_doc_pairs(
     grams = spread(docs.select(id_col, text_col)).mapInPandas(
         emit_grams, schema="doc_id bigint, g bigint"
     )
-    return _capped_bucket_pairs(grams, cap)
+    return _capped_bucket_pairs(grams)
 
 
 # ---------------------------------------------------------------------------

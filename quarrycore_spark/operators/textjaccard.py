@@ -9,14 +9,16 @@ multi-referenced CTEs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from quarrycore_spark import config
 from quarrycore_spark.operators._cache import track
+from quarrycore_spark.operators.lsh import capped
 
 
 def trigram_jaccard_pairs(
-    docs: DataFrame, threshold_pct: int, cap: int,
+    docs: DataFrame, threshold_pct: int,
     id_col: str = "doc_id", text_col: str = "text",
 ) -> DataFrame:
     """Trigram hashing runs in the batched md5 kernel
@@ -55,12 +57,7 @@ def trigram_jaccard_pairs(
     gx = t.select("doc_id", F.size("tg").alias("n_g"), F.explode("tg").alias("g"))
     # 2..cap bucket filter as a window count over the self-join's own
     # partitioning (one wide shuffle, no cached exploded table)
-    w = Window.partitionBy("g")
-    gk = (
-        gx.withColumn("gsz", F.count(F.lit(1)).over(w))
-        .filter((F.col("gsz") >= 2) & (F.col("gsz") <= cap))
-        .drop("gsz")
-    )
+    gk = capped(gx, "g", "doc_id", config.LSH_BUCKET_CAP)
     inter = (
         gk.alias("a")
         .join(

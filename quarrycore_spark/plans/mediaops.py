@@ -43,7 +43,7 @@ from quarrycore_spark.plans.registry import Query, register
 W, H = 9, 8
 HAMMING_MAX = 7
 # Identical-phash classes above this size are excluded from pair expansion
-# entirely (stubs.phash_near_dup_pairs class_cap) — encoded in BOTH dialects
+# entirely (media.phash_near_dup_pairs class_cap) — encoded in BOTH dialects
 # below so the oracle equivalence is by construction, not by the test data
 # happening to stay small (class size here ≈ docs/776, so the cap never
 # fires at test scale, but the rule is part of the checked definition).
@@ -105,7 +105,7 @@ def _media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    from quarrycore_spark.multimodal.stubs import MEDIA_SCHEMA
+    from quarrycore_spark.multimodal.media import MEDIA_SCHEMA
 
     from quarrycore_spark.operators._partitioning import spread
 
@@ -113,7 +113,7 @@ def _media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spark_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quarrycore_spark.multimodal.stubs import (
+    from quarrycore_spark.multimodal.media import (
         extract_media_features,
         phash_near_dup_pairs,
     )

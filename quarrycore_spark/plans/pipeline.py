@@ -245,9 +245,7 @@ def run_pipeline(
     resume: bool = True,
     min_overlap: int | None = None,
     substring: bool = True,
-    metadata: bool = False,
     cascade_threshold: int = 0,
-    domain_overrides: dict | None = None,
     family: str = "poly",
 ) -> PipelineResult:
     """family selects the near-dup signature scheme end-to-end:
@@ -266,26 +264,10 @@ def run_pipeline(
     src = spread(pages)
     extracted = _stage(
         spark, out_dir, man, "extracted",
-        lambda: extract_pages(
-            src, cascade_threshold=cascade_threshold,
-            domain_overrides=domain_overrides,
-        ).withColumn("doc_id", F.xxhash64("url")),
+        lambda: extract_pages(src, cascade_threshold=cascade_threshold)
+        .withColumn("doc_id", F.xxhash64("url")),
         resume,
     )
-
-    # ---- stage 1b: page metadata (P14, opt-in, informational) -----------
-    # OpenGraph/Twitter/JSON-LD/canonical/date/author columns per page
-    # (extraction/metadata.py). Pure per-row Arrow pass over the same
-    # partitioning as extraction — no shuffle; does not feed dedup, so it
-    # is off by default (the graded detection pipeline is unchanged).
-    if metadata:
-        from quarrycore_spark.extraction.metadata import with_page_metadata
-
-        _stage(
-            spark, out_dir, man, "page_metadata",
-            lambda: with_page_metadata(src),
-            resume,
-        )
 
     # ---- stage 2: exact dedup (D1, D2) ----------------------------------
     # content_hash comes from the extraction UDF (sha256 over canonical

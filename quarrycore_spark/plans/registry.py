@@ -189,9 +189,10 @@ register(Query("dedup_metrics", "D17: corpus-level dedup counters", _dedup_metri
 
 # Cap on LSH bucket size: buckets larger than this (boilerplate mega-buckets,
 # reference's unbounded datasketch buckets — SURVEY §7 hard part (d)) are
-# dropped from candidate generation. Deterministic, encoded in BOTH dialects,
-# sourced from config.LSH_BUCKET_CAP so Spark and oracle can never drift
-# (VERDICT r5 #3 — imported above, referenced by every capped SQL below).
+# dropped from candidate generation. Deterministic, encoded in BOTH dialects
+# from config.LSH_BUCKET_CAP: every capped SQL below writes it, and the Spark
+# operators read it through operators/lsh.py `capped`, so the two sides can
+# never drift.
 
 
 def _sigs(spark: SparkSession, sf_dir: str):
@@ -279,7 +280,7 @@ GROUP BY a.doc_id, b.doc_id
 def _spark_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quarrycore_spark.operators.lsh import candidate_pairs
 
-    return candidate_pairs(_sigs(spark, sf_dir), LSH_BUCKET_CAP)
+    return candidate_pairs(_sigs(spark, sf_dir))
 
 
 register(
@@ -317,7 +318,7 @@ SELECT a_id, b_id, agree_cnt FROM _ver WHERE {thresh}
 def _spark_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quarrycore_spark.operators.lsh import verified_pairs
 
-    return verified_pairs(_sigs(spark, sf_dir), CFG, LSH_BUCKET_CAP)
+    return verified_pairs(_sigs(spark, sf_dir), CFG)
 
 
 register(
@@ -410,7 +411,7 @@ def _spark_near_dup_recall_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # times (band explode × both self-join sides + both verify lookups);
     # without it the MapInPandas signature pass runs 4× in the plan
     sigs = track(with_signatures(seeded, CFG))
-    ver = verified_pairs(sigs, CFG, LSH_BUCKET_CAP)
+    ver = verified_pairs(sigs, CFG)
     injected = eligible.select(F.col("doc_id").alias("orig_id"))
     return (
         injected.join(
@@ -469,17 +470,22 @@ register(
 )
 
 
+def _simhash_band_array(dialect: str) -> str:
+    """The pigeonhole band array of a `simhash` column: simhash_bands
+    slices of simhash_bits / simhash_bands bits."""
+    width = CFG.simhash_bits // CFG.simhash_bands
+    mask = (1 << width) - 1
+    bands = ", ".join(f"(simhash >> {i * width}) & {mask}" for i in range(CFG.simhash_bands))
+    return f"array({bands})" if dialect == SPARK else f"[{bands}]"
+
+
 def _simhash_band_ctes(dialect: str) -> str:
     """The pigeonhole band/cap/candidate CTE chain over `_sim` — shared by
     `simhash_pairs` and the injected-copy recall gate so the recall query
     exercises the IDENTICAL banded path."""
-    width = CFG.simhash_bits // CFG.simhash_bands
-    mask = (1 << width) - 1
-    bands = ", ".join(f"(simhash >> {i * width}) & {mask}" for i in range(CFG.simhash_bands))
-    bands_arr = f"array({bands})" if dialect == SPARK else f"[{bands}]"
     return f"""_bx AS (
   SELECT doc_id, simhash AS sim_a,
-         {D.posexplode(bands_arr, 'band_idx', 'band_val', dialect)}
+         {D.posexplode(_simhash_band_array(dialect), 'band_idx', 'band_val', dialect)}
   FROM _sim
 ),
 _cap AS (
@@ -512,7 +518,7 @@ WHERE {D.bit_count(D.xor('sim_a', 'sim_b', dialect), dialect)} <= {CFG.hamming_m
 def _spark_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quarrycore_spark.operators.simhash import simhash_pairs
 
-    return simhash_pairs(_sigs(spark, sf_dir), CFG, LSH_BUCKET_CAP)
+    return simhash_pairs(_sigs(spark, sf_dir), CFG)
 
 
 register(
@@ -586,7 +592,7 @@ def _spark_simhash_recall_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seeded = docs.select("doc_id", "text").unionByName(inj)
     sigs = track(with_signatures(seeded, CFG))
-    pairs = simhash_pairs(sigs, CFG, LSH_BUCKET_CAP)
+    pairs = simhash_pairs(sigs, CFG)
     sa = sigs.select(F.col("doc_id").alias("orig_id"), F.col("simhash").alias("sim_a"))
     sb = sigs.filter(F.col("doc_id") >= offset).select(
         (F.col("doc_id") - F.lit(offset)).alias("orig_id"),
@@ -627,7 +633,10 @@ register(
 SUBSTR_L = CFG.min_overlap_small  # documents-table texts are ~300 chars
 
 
-def _substring_pairs_sql(dialect: str) -> str:
+def _capped_gram_ctes(dialect: str) -> str:
+    """CTEs over `_docs`: each doc's distinct L-gram hashes (`_g`), one row
+    per gram (`_gx`), and the rows of 2..cap gram buckets (`_gk`) — shared
+    by `substring_pairs` and its injected-copy recall gate."""
     if dialect == SPARK:
         grams = (
             f"case when length(nt) < {SUBSTR_L} then array({D.hex_int('nt', 15, dialect)}) "
@@ -642,12 +651,16 @@ def _substring_pairs_sql(dialect: str) -> str:
             f"i -> {D.hex_int(f'substr(nt, i + 1, {SUBSTR_L})', 15, dialect)})) end"
         )
         explode = "unnest(grams) AS g"
-    return f"""
-WITH {P.doc_norm(dialect, CFG)},
-_g AS (SELECT doc_id, {grams} AS grams FROM _docs),
+    return f"""_g AS (SELECT doc_id, {grams} AS grams FROM _docs),
 _gx AS (SELECT doc_id, {explode} FROM _g),
 _cap AS (SELECT g FROM _gx GROUP BY g HAVING count(*) BETWEEN 2 AND {LSH_BUCKET_CAP}),
-_gk AS (SELECT x.doc_id, x.g FROM _gx x JOIN _cap c ON x.g = c.g)
+_gk AS (SELECT x.doc_id, x.g FROM _gx x JOIN _cap c ON x.g = c.g)"""
+
+
+def _substring_pairs_sql(dialect: str) -> str:
+    return f"""
+WITH {P.doc_norm(dialect, CFG)},
+{_capped_gram_ctes(dialect)}
 SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS shared_grams
 FROM _gk a JOIN _gk b ON a.g = b.g AND a.doc_id < b.doc_id
 GROUP BY a.doc_id, b.doc_id
@@ -684,20 +697,6 @@ _SUBSTR_RECALL_SELECTOR = "doc_id % 10 IN (4, 5) AND length(text) >= 240"
 
 
 def _substring_recall_synth(dialect: str) -> str:
-    if dialect == SPARK:
-        grams = (
-            f"case when length(nt) < {SUBSTR_L} then array({D.hex_int('nt', 15, dialect)}) "
-            f"else array_distinct(transform(sequence(0, length(nt) - {SUBSTR_L}), "
-            f"i -> {D.hex_int(f'substring(nt, i + 1, {SUBSTR_L})', 15, dialect)})) end"
-        )
-        explode = "explode(grams) AS g"
-    else:
-        grams = (
-            f"case when length(nt) < {SUBSTR_L} then [{D.hex_int('nt', 15, dialect)}] "
-            f"else list_distinct(list_transform(range(0, length(nt) - {SUBSTR_L} + 1), "
-            f"i -> {D.hex_int(f'substr(nt, i + 1, {SUBSTR_L})', 15, dialect)})) end"
-        )
-        explode = "unnest(grams) AS g"
     return f"""
 WITH _inj AS (
   SELECT doc_id + {_RECALL_OFF_SQL} AS doc_id, substr(text, 41, 160) AS text
@@ -708,10 +707,7 @@ _seeded AS (
   UNION ALL SELECT doc_id, text FROM _inj
 ),
 {P.doc_norm(dialect, CFG, table="_seeded")},
-_g AS (SELECT doc_id, {grams} AS grams FROM _docs),
-_gx AS (SELECT doc_id, {explode} FROM _g),
-_cap AS (SELECT g FROM _gx GROUP BY g HAVING count(*) BETWEEN 2 AND {LSH_BUCKET_CAP}),
-_gk AS (SELECT x.doc_id, x.g FROM _gx x JOIN _cap c ON x.g = c.g),
+{_capped_gram_ctes(dialect)},
 _pairs AS (
   SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS shared_grams
   FROM _gk a JOIN _gk b ON a.g = b.g AND a.doc_id < b.doc_id
@@ -741,7 +737,7 @@ def _spark_substring_recall_synth(spark: SparkSession, sf_dir: str) -> DataFrame
         F.substring("text", 41, 160).alias("text"),
     )
     seeded = docs.select("doc_id", "text").unionByName(inj)
-    pairs = gram_doc_pairs(seeded, SUBSTR_L, cap=LSH_BUCKET_CAP)
+    pairs = gram_doc_pairs(seeded, SUBSTR_L)
     injected = eligible.select(F.col("doc_id").alias("orig_id"))
     return (
         injected.join(
@@ -784,10 +780,6 @@ def _edges_sql(dialect: str) -> str:
     components and an identical "later member" set (every non-min member
     appears as `v` exactly as it would in the clique)."""
     thresh = CFG.num_perm * CFG.jaccard_threshold_pct
-    width = CFG.simhash_bits // CFG.simhash_bands
-    mask = (1 << width) - 1
-    bands = ", ".join(f"(simhash >> {i * width}) & {mask}" for i in range(CFG.simhash_bands))
-    bands_arr = f"array({bands})" if dialect == SPARK else f"[{bands}]"
     return f"""{P.doc_norm(dialect, CFG)},
 {P.doc_shingles(dialect, CFG)},
 {P.doc_hashes31(dialect, CFG)},
@@ -815,7 +807,7 @@ _mh0 AS (
   JOIN _sig sa ON sa.doc_id = c.a_id JOIN _sig sb ON sb.doc_id = c.b_id
 ),
 _mh AS (SELECT u, v, agree FROM _mh0 WHERE 100 * agree >= {thresh}),
-_sbx AS (SELECT doc_id, simhash, {D.posexplode(bands_arr, 'band_idx', 'band_val', dialect)} FROM _sim),
+_sbx AS (SELECT doc_id, simhash, {D.posexplode(_simhash_band_array(dialect), 'band_idx', 'band_val', dialect)} FROM _sim),
 _caps AS (SELECT band_idx, band_val FROM _sbx GROUP BY band_idx, band_val
           HAVING count(*) BETWEEN 2 AND {LSH_BUCKET_CAP}),
 _bkts AS (SELECT b.doc_id, b.simhash, b.band_idx, b.band_val FROM _sbx b
@@ -830,17 +822,23 @@ _edges AS (
 )"""
 
 
+# Transitive closure of `_edges` over every doc in `documents` (after
+# `_edges_sql`, in a WITH RECURSIVE): `reach(src, dst)` holds every doc a
+# doc reaches, itself included, so min(dst) per src is its component id.
+_REACH_CTES = """_sym AS (SELECT u, v FROM _edges UNION SELECT v AS u, u AS v FROM _edges),
+reach(src, dst) AS (
+  SELECT doc_id AS src, doc_id AS dst FROM documents
+  UNION
+  SELECT r.src, s.v AS dst FROM reach r JOIN _sym s ON r.dst = s.u
+)"""
+
+
 def _dedup_clusters_sql(dialect: str) -> str:
     """DuckDB-only oracle: transitive closure via recursive CTE. The Spark
     side runs large-star/small-star label propagation (operators/cc.py)."""
     return f"""
 WITH RECURSIVE {_edges_sql(dialect)},
-_sym AS (SELECT u, v FROM _edges UNION SELECT v AS u, u AS v FROM _edges),
-reach(src, dst) AS (
-  SELECT doc_id AS src, doc_id AS dst FROM documents
-  UNION
-  SELECT r.src, s.v AS dst FROM reach r JOIN _sym s ON r.dst = s.u
-)
+{_REACH_CTES}
 SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src
 """
 
@@ -863,10 +861,10 @@ def dedup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") > F.col("u"))
         .select("u", F.col("doc_id").alias("v"))
     )
-    mh = verified_pairs(sigs, CFG, LSH_BUCKET_CAP).select(
+    mh = verified_pairs(sigs, CFG).select(
         F.col("a_id").alias("u"), F.col("b_id").alias("v")
     )
-    sh = simhash_pairs(sigs, CFG, LSH_BUCKET_CAP).select(
+    sh = simhash_pairs(sigs, CFG).select(
         F.col("a_id").alias("u"), F.col("b_id").alias("v")
     )
     return ex.union(mh).union(sh).distinct()
@@ -936,13 +934,13 @@ def _spark_dedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("t_exact", F.lit(True))
     )
     mh = (
-        verified_pairs(sigs, CFG, LSH_BUCKET_CAP)
+        verified_pairs(sigs, CFG)
         .groupBy(F.col("b_id").alias("doc_id"))
         .agg(F.max("agree_cnt").alias("best_agree"))
         .withColumn("t_minhash", F.lit(True))
     )
     sh = (
-        simhash_pairs(sigs, CFG, LSH_BUCKET_CAP)
+        simhash_pairs(sigs, CFG)
         .select(F.col("b_id").alias("doc_id"))
         .distinct()
         .withColumn("t_simhash", F.lit(True))
@@ -989,12 +987,7 @@ def _cluster_size_histogram_sql(dialect: str) -> str:
     the 'cluster sizes / dedup ratio' aggregation of SURVEY §2.5."""
     return f"""
 WITH RECURSIVE {_edges_sql(dialect)},
-_sym AS (SELECT u, v FROM _edges UNION SELECT v AS u, u AS v FROM _edges),
-reach(src, dst) AS (
-  SELECT doc_id AS src, doc_id AS dst FROM documents
-  UNION
-  SELECT r.src, s.v AS dst FROM reach r JOIN _sym s ON r.dst = s.u
-),
+{_REACH_CTES},
 _cl AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src),
 _sz AS (SELECT cluster_id, count(*) AS cluster_size FROM _cl GROUP BY cluster_id)
 SELECT cluster_size, count(*) AS n_clusters
@@ -1043,12 +1036,7 @@ def _cluster_representatives_sql(dialect: str) -> str:
     for, and the hash pins them."""
     return f"""
 WITH RECURSIVE {_edges_sql(dialect)},
-_sym AS (SELECT u, v FROM _edges UNION SELECT v AS u, u AS v FROM _edges),
-reach(src, dst) AS (
-  SELECT doc_id AS src, doc_id AS dst FROM documents
-  UNION
-  SELECT r.src, s.v AS dst FROM reach r JOIN _sym s ON r.dst = s.u
-),
+{_REACH_CTES},
 _cl AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src),
 _q AS (SELECT doc_id, {_quality_scaled_sql(dialect)} AS quality_scaled
        FROM documents),

@@ -11,6 +11,7 @@ so the hot path is whole-stage-codegen JVM in Spark.
 from __future__ import annotations
 
 from quarrycore_spark.config import DEFAULT_CONFIG as CFG
+from quarrycore_spark.config import LSH_BUCKET_CAP
 from quarrycore_spark.functions import dialect as D
 from quarrycore_spark.functions.dialect import SPARK
 from quarrycore_spark.plans import prelude as P
@@ -423,7 +424,6 @@ register(
 
 # --- n-gram Jaccard dedup ---------------------------------------------------
 
-TRIGRAM_CAP = 200
 TRIGRAM_THRESHOLD_PCT = 60
 
 
@@ -458,7 +458,7 @@ _w AS (SELECT doc_id, {words} AS ws, nt FROM _docs),
 _t AS (SELECT doc_id, {tg} AS tg FROM _w),
 _sz AS (SELECT doc_id, {sz} AS n_g FROM _t),
 _gx AS (SELECT doc_id, {explode} FROM _t),
-_cap AS (SELECT g FROM _gx GROUP BY g HAVING count(*) BETWEEN 2 AND {TRIGRAM_CAP}),
+_cap AS (SELECT g FROM _gx GROUP BY g HAVING count(*) BETWEEN 2 AND {LSH_BUCKET_CAP}),
 _gk AS (SELECT x.doc_id, x.g FROM _gx x JOIN _cap c ON x.g = c.g),
 _int AS (
   SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS inter_cnt
@@ -479,7 +479,7 @@ def _spark_trigram_jaccard(spark, sf_dir):
     from quarrycore_spark.sources.tables import load
 
     docs = load(spark, sf_dir, "documents")["documents"]
-    return trigram_jaccard_pairs(docs, TRIGRAM_THRESHOLD_PCT, TRIGRAM_CAP)
+    return trigram_jaccard_pairs(docs, TRIGRAM_THRESHOLD_PCT)
 
 
 register(

@@ -35,8 +35,8 @@ PAIR_COS_PCT = 30  # embedding near-dup threshold (cos >= 0.30)
 # Banded hyperplane LSH: candidate iff any band's planes all agree in sign.
 # 16 planes per band = 65,536 signatures per band, so bucket population at
 # a given corpus size is ~n/65k per band BEFORE the 2..cap size filter —
-# the cap (ANN_LSH_BUCKET_CAP, mirroring the text LSH's bucket guard) is
-# what bounds the in-bucket O(size²) verify regardless of n. For corpora
+# the cap (LSH_BUCKET_CAP, the text LSH's bucket guard) is what bounds
+# the in-bucket O(size²) verify regardless of n. For corpora
 # where n/65k outgrows the cap (≳10⁷ vectors of one dominant direction),
 # raise LSH_PLANES_PER_BAND — each +1 plane halves expected bucket load.
 # Measured on the driver's embeddings (near-isotropic): sf0.01 → 5 pairs,
@@ -44,7 +44,6 @@ PAIR_COS_PCT = 30  # embedding near-dup threshold (cos >= 0.30)
 LSH_BANDS = 16
 LSH_PLANES_PER_BAND = 16
 LSH_COS_PCT = 30
-ANN_LSH_BUCKET_CAP = LSH_BUCKET_CAP
 
 
 def _qvec(dialect: str) -> str:
@@ -316,7 +315,7 @@ def _ann_lsh_pairs(dialect: str) -> str:
     """Banded random-hyperplane LSH near-dup pairs — the scale path:
     candidates come only from (band_idx, band_sig) bucket collisions
     (any of 16 bands of 16 sign bits matching), restricted to buckets with
-    2..ANN_LSH_BUCKET_CAP members (singletons pair with nothing;
+    2..LSH_BUCKET_CAP members (singletons pair with nothing;
     mega-buckets are a dominant direction — dropped deterministically,
     same rule as the Spark operator and the text LSH), then exact
     quantized-cosine verification. At 10^12 rows this is an explode +
@@ -361,7 +360,7 @@ _sig AS{mat} (SELECT vec_id, q, na,
 _ok AS (
   SELECT band_idx, band_sig FROM _sig
   GROUP BY band_idx, band_sig
-  HAVING count(*) >= 2 AND count(*) <= {ANN_LSH_BUCKET_CAP}
+  HAVING count(*) >= 2 AND count(*) <= {LSH_BUCKET_CAP}
 ),
 _sigf AS (
   SELECT s.vec_id, s.band_idx, s.band_sig

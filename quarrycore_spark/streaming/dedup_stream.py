@@ -127,7 +127,6 @@ class ForeachBatchDedup:
 def streaming_lsh_pairs(
     docs_stream: DataFrame,
     cfg=None,
-    cap: int = 200,
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """Stateful streaming near-dup detection via ``applyInPandasWithState``
@@ -144,11 +143,11 @@ def streaming_lsh_pairs(
     dropDuplicates is the consumer's choice (kept out so the operator
     stays watermark-free).
 
-    State per bucket is capped at ``cap`` members — the streaming analogue
-    of the batch bucket cap: once a bucket REACHES the cap it is treated
-    as a boilerplate mega-bucket and goes inert (no further inserts AND no
-    further pair emission, matching the batch operator's drop-the-bucket
-    guard). One semantic difference from batch is inherent to streaming:
+    State per bucket is capped at ``config.LSH_BUCKET_CAP`` members — the
+    streaming analogue of the batch bucket cap (``lsh.capped``): once a
+    bucket REACHES the cap it is treated as a boilerplate mega-bucket and
+    goes inert (no further inserts AND no further pair emission, matching
+    the batch operator's drop-the-bucket guard). One semantic difference from batch is inherent to streaming:
     pairs emitted before the bucket hit the cap are already downstream and
     cannot be retracted, whereas the batch operator drops the whole bucket
     retroactively.
@@ -176,11 +175,12 @@ def streaming_lsh_pairs(
     import numpy as np
     import pandas as pd
 
-    from quarrycore_spark.config import DEFAULT_CONFIG
+    from quarrycore_spark import config
     from quarrycore_spark.operators.lsh import _MAX_BANDS
     from quarrycore_spark.operators.signatures import with_signatures
 
-    cfg = cfg or DEFAULT_CONFIG
+    cfg = cfg or config.DEFAULT_CONFIG
+    cap = config.LSH_BUCKET_CAP
     num_perm = cfg.num_perm
     thr = cfg.jaccard_threshold_pct
 

@@ -97,13 +97,14 @@ def _correlated_embeddings(spark, n: int = 300, seed: int = 11, noise: float = 0
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_ann_lsh_mega_buckets_dropped(spark):
+def test_ann_lsh_mega_buckets_dropped(spark, monkeypatch):
     """A dominant direction must never reach the in-bucket quadratic
     verify: buckets above the cap are dropped BEFORE applyInPandas, so the
     capped result is empty here (every band holds ONE bucket of all n
     vectors), while a raised cap proves the pairs exist and the drop was
     the guard's doing. This is the 10^12-row safety property: task cost is
     O(cap²) however correlated the corpus is."""
+    from quarrycore_spark import config
     from quarrycore_spark.operators.ann import ann_lsh_pairs, lsh_band_signatures
     from quarrycore_spark.plans.vectorops import LSH_BANDS
 
@@ -118,22 +119,25 @@ def test_ann_lsh_mega_buckets_dropped(spark):
     assert len(sizes) == LSH_BANDS  # total collapse: one bucket per band
     capped = ann_lsh_pairs(emb).collect()
     assert capped == []  # all buckets over cap -> dropped deterministically
-    uncapped = ann_lsh_pairs(emb, cap=1000).collect()
+    monkeypatch.setattr(config, "LSH_BUCKET_CAP", 1000)
+    uncapped = ann_lsh_pairs(emb).collect()
     assert len(uncapped) == 300 * 299 // 2  # the pairs exist; the cap dropped them
 
 
-def test_ann_lsh_cone_mostly_dropped(spark):
+def test_ann_lsh_cone_mostly_dropped(spark, monkeypatch):
     """With small noise a near-balanced hyperplane may SPLIT the cone and
     leave a sub-cap splinter bucket — those legitimately survive; the cap
     must still have removed the mega-buckets (output far below the full
     clique)."""
+    from quarrycore_spark import config
     from quarrycore_spark.operators.ann import ann_lsh_pairs
 
     emb = _correlated_embeddings(spark, n=300, noise=0.001)
     capped = ann_lsh_pairs(emb).collect()
     full = 300 * 299 // 2
     assert len(capped) < full // 10  # mega-buckets gone, splinters may stay
-    assert len(ann_lsh_pairs(emb, cap=1000).collect()) == full
+    monkeypatch.setattr(config, "LSH_BUCKET_CAP", 1000)
+    assert len(ann_lsh_pairs(emb).collect()) == full
 
 
 def test_ann_lsh_cap_keeps_small_buckets(spark):

@@ -104,7 +104,7 @@ def test_trigram_ratio_prune_keeps_boundary_pair(spark):
     docs = spark.createDataFrame(
         [(1, a_text), (2, b_text)], "doc_id long, text string"
     )
-    rows = trigram_jaccard_pairs(docs, 60, 200).collect()
+    rows = trigram_jaccard_pairs(docs, 60).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["a_id"], r["b_id"]) == (1, 2)
@@ -125,7 +125,7 @@ def test_trigram_ratio_prune_output_matches_unpruned_oracle(spark, con):
     docs = spark.createDataFrame(texts, "doc_id long, text string")
     got = sorted(
         (r["a_id"], r["b_id"], r["inter_cnt"], r["union_cnt"])
-        for r in trigram_jaccard_pairs(docs, 60, 200).collect()
+        for r in trigram_jaccard_pairs(docs, 60).collect()
     )
     con.execute("CREATE OR REPLACE TABLE _tj(doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO _tj VALUES (?, ?)", texts)

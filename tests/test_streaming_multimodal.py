@@ -126,7 +126,7 @@ def test_foreach_batch_cross_batch_dedup(spark, pages_parquet, tmp_path):
 def test_multimodal_features_and_dedup(spark):
     """Real payloads end to end: an identical BMP pair dedups to one
     canonical, the WAV decodes, and a null payload dead-letters."""
-    from quarrycore_spark.multimodal.stubs import (
+    from quarrycore_spark.multimodal.media import (
         MEDIA_SCHEMA,
         exact_media_dedup,
         extract_media_features,
@@ -195,7 +195,7 @@ def test_real_decode_features_and_phash_pairs(spark):
     formats dead-letter."""
     import numpy as np
 
-    from quarrycore_spark.multimodal.stubs import (
+    from quarrycore_spark.multimodal.media import (
         extract_media_features,
         phash_near_dup_pairs,
     )
@@ -213,7 +213,7 @@ def test_real_decode_features_and_phash_pairs(spark):
         (6, "image", bytearray(b"\x89PNG fake"), ("image/png", 8, 8, None)),
         (7, "video", bytearray(b"mp4 fake"), ("video/mp4", None, None, 5000)),
     ]
-    from quarrycore_spark.multimodal.stubs import MEDIA_SCHEMA
+    from quarrycore_spark.multimodal.media import MEDIA_SCHEMA
 
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     feats = {r["media_id"]: r for r in
@@ -254,7 +254,7 @@ def test_phash_pairs_match_allpairs_at_scale(spark):
 
     import numpy as np
 
-    from quarrycore_spark.multimodal.stubs import phash_near_dup_pairs
+    from quarrycore_spark.multimodal.media import phash_near_dup_pairs
     from quarrycore_spark.plans.mediaops import HAMMING_MAX, pixel_grid
 
     def phash(doc_id: int) -> int:

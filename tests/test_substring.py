@@ -139,10 +139,11 @@ def _cap_boundary_docs(cap: int) -> list[tuple[int, str]]:
 
 
 @pytest.mark.parametrize("kind", ["gram", "winnow"])
-def test_candidate_pairs_match_bucket_reference(spark, kind):
+def test_candidate_pairs_match_bucket_reference(spark, monkeypatch, kind):
     """winnow_doc_pairs / gram_doc_pairs equal a pure-Python bucket
     reference, with a bucket of exactly `cap` members (kept) and one of
     `cap + 1` members (dropped)."""
+    from quarrycore_spark import config
     from quarrycore_spark.operators.md5grams import window_hashes60
     from quarrycore_spark.operators.signatures import normalize_text
     from quarrycore_spark.operators.substring import (
@@ -151,13 +152,14 @@ def test_candidate_pairs_match_bucket_reference(spark, kind):
     )
 
     cap, l_gram = 4, 30
+    monkeypatch.setattr(config, "LSH_BUCKET_CAP", cap)
     rows = _cap_boundary_docs(cap)
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     if kind == "gram":
-        got_df = gram_doc_pairs(docs, l_gram, cap=cap)
+        got_df = gram_doc_pairs(docs, l_gram)
         grams = {d: window_hashes60(normalize_text(t), l_gram) for d, t in rows}
     else:
-        got_df = winnow_doc_pairs(docs, l_gram, cap=cap)
+        got_df = winnow_doc_pairs(docs, l_gram)
         k = max(l_gram // 2, 4)
         grams = {
             d: winnow_fingerprints(normalize_text(t), k, l_gram - k + 1)
