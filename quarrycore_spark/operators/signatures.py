@@ -22,7 +22,6 @@ Reference semantics covered (SURVEY.md §2.3):
 from __future__ import annotations
 
 import hashlib
-import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -30,10 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from quarrycore_spark.config import DEFAULT_CONFIG, MERSENNE_31, DedupConfig
-from quarrycore_spark.extraction.canonical import split_is_ws_safe
+from quarrycore_spark.extraction.canonical import _collapse_ws
 from quarrycore_spark.operators._kernel_log import kernel_span
-
-_WS = re.compile(r"\s+", re.ASCII)
 
 # sig/bands values are residues mod the 31-bit Mersenne prime, so INT32
 # carries them exactly — half the bytes of bigint through the Arrow IPC,
@@ -55,15 +52,9 @@ _CHUNK_ELEMS = 65536
 def normalize_text(text: str) -> str:
     """Shingle-normalization contract (reference minhash_redis.py:174-176).
 
-    Matches dialect.norm_text: collapse ASCII whitespace runs to one space,
-    trim, lowercase. re.ASCII keeps \\s aligned with Java/RE2 semantics.
-    Fast path: " ".join(split()) is byte-identical where split_is_ws_safe
-    holds (ASCII without \\x1c-\\x1f) and ~10x faster; other text keeps
-    the regex so unicode whitespace (nbsp etc.) and \\x1c-\\x1f are NOT
-    collapsed, exactly like Java \\s."""
-    if split_is_ws_safe(text):
-        return " ".join(text.split()).lower()
-    return _WS.sub(" ", text).strip().lower()
+    Matches dialect.norm_text: collapse ASCII whitespace runs to one space
+    (Java \\s semantics, see canonical._collapse_ws), trim, lowercase."""
+    return _collapse_ws(text).lower()
 
 
 def char_shingles(nt: str, k: int) -> list[str]:

@@ -284,7 +284,8 @@ def lcs_extent_hashed(a: str, b: str, lo: int = 1) -> tuple[int, int, int]:
 
 
 def _lcs_extent_exact(a: str, b: str) -> tuple[int, int, int]:
-    """Exact maximal extent via suffix array + LCP over the joined string."""
+    """Exact maximal extent via suffix array + LCP over the sentinel-joined
+    string (sentinel chr(1) cannot occur in normalized text)."""
     joined = a + "\x01" + b
     sa_arr = _suffix_array(joined)
     lcp = _lcp_array(joined, sa_arr)
@@ -294,6 +295,7 @@ def _lcs_extent_exact(a: str, b: str) -> tuple[int, int, int]:
         x, y = sa_arr[i - 1], sa_arr[i]
         if (x < na) != (y < na):
             v = int(lcp[i])
+            # cap at distance to the sentinel so matches never span it
             v = min(v, abs((na - x) if x < na else (na - y)))
             if v > best:
                 pa = int(x if x < na else y)
@@ -303,23 +305,8 @@ def _lcs_extent_exact(a: str, b: str) -> tuple[int, int, int]:
 
 
 def longest_common_substring_len(a: str, b: str) -> int:
-    """Length of the longest common substring via suffix array + LCP over
-    the sentinel-joined string (sentinel chr(1) cannot occur in normalized
-    text)."""
-    joined = a + "\x01" + b
-    sa = _suffix_array(joined)
-    lcp = _lcp_array(joined, sa)
-    na = len(a)
-    best = 0
-    for i in range(1, len(joined)):
-        x, y = sa[i - 1], sa[i]
-        if (x < na) != (y < na):
-            v = int(lcp[i])
-            # cap at distance to the sentinel so matches never span it
-            v = min(v, abs((na - x) if x < na else (na - y)))
-            if v > best:
-                best = v
-    return best
+    """Length of the longest common substring (the exact extent's length)."""
+    return _lcs_extent_exact(a, b)[0]
 
 
 def _pair_ends(pdf: pd.DataFrame) -> pd.DataFrame:

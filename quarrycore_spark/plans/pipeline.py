@@ -243,7 +243,6 @@ def run_pipeline(
     out_dir: str,
     cfg: DedupConfig = DEFAULT_CONFIG,
     resume: bool = True,
-    min_overlap: int | None = None,
     substring: bool = True,
     cascade_threshold: int = 0,
     family: str = "poly",
@@ -376,14 +375,13 @@ def run_pipeline(
     # contained_in relations (the reference's partial-match scan,
     # fuzzy_matcher.py:213-236). Informational output — does NOT feed CC
     # (containment is not duplication).
-    mo = min_overlap if min_overlap is not None else cfg.min_overlap
-
     def build_substring():
         from quarrycore_spark.operators.substring import (
             substring_extents,
             winnow_doc_pairs,
         )
 
+        mo = cfg.min_overlap
         cand = winnow_doc_pairs(survivors, mo, id_col="doc_id", text_col="text")
         return substring_extents(survivors, cand, mo, id_col="doc_id", text_col="text")
 

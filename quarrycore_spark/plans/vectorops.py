@@ -384,9 +384,7 @@ WHERE dot > 0 AND 10000 * dot * dot >= {LSH_COS_PCT * LSH_COS_PCT} * na * nb
 
 
 def _spark_ann_lsh_pairs(spark, sf_dir):
-    # Scale path: ann_lsh_pairs only (slim band rows, cap before vectors
-    # move). ann.lsh_band_signatures is diagnostics-only — it re-attaches
-    # vectors to exploded band rows and must never feed pair generation.
+    # Scale path: slim band rows are capped before any vector moves.
     from quarrycore_spark.operators.ann import ann_lsh_pairs
     from quarrycore_spark.sources.tables import load
 

@@ -14,7 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from quarrycore_spark.operators import ann
-from quarrycore_spark.operators.ann import ann_topk, ivf_probes, ivf_topk
+from quarrycore_spark.operators.ann import ann_topk, ivf_assignments, ivf_topk
+from quarrycore_spark.plans import vectorops
 
 DIM = 64
 
@@ -47,24 +48,30 @@ def test_ivf_topk_skewed_codebook_matches_exact(spark):
     emb = _skewed_embeddings(spark)
     exact = {
         (r["query_id"], r["rnk"]): (r["neighbor_id"], r["score_q"])
-        for r in ann_topk(emb, stride=50).collect()
+        for r in ann_topk(emb).collect()
     }
     ivf = {
         (r["query_id"], r["rnk"]): (r["neighbor_id"], r["score_q"])
-        for r in ivf_topk(emb, stride=50, cent_stride=31).collect()
+        for r in ivf_topk(emb).collect()
     }
     assert set(ivf) == set(exact)
     assert ivf == exact
 
 
-def test_ivf_probes_distributed_tiebreak(spark):
-    """ivf_probes (the distributed probe kernel) reproduces the oracle's
-    top-nprobe-by-(score desc, centroid id asc) rule."""
+def test_centroid_probes_distributed_tiebreak(spark):
+    """The distributed centroid kernel at IVF_NPROBE reproduces the
+    oracle's top-nprobe-by-(score desc, centroid id asc) rule."""
     emb = _skewed_embeddings(spark, n=200, seed=3)
-    probes = ivf_probes(emb, stride=50, cent_stride=31, nprobe=4)
+    qv = ann.quantized_frame(emb).filter(F.col("na") > 0)
+    (cent,) = ann._sampled(qv, "centroids")
+    probes = ann._top_centroids(
+        qv.filter(F.col("vec_id") % vectorops.QUERY_STRIDE == 0),
+        spark.sparkContext.broadcast(cent),
+        vectorops.IVF_NPROBE,
+    )
     got = {}
     for r in probes.collect():
-        got.setdefault(r["query_id"], set()).add(r["centroid_id"])
+        got.setdefault(r["vec_id"], set()).add(r["centroid_id"])
     # reference computation in numpy over the same quantized integers
     rows = emb.collect()
     q = {
@@ -105,12 +112,12 @@ def test_ann_lsh_mega_buckets_dropped(spark, monkeypatch):
     the guard's doing. This is the 10^12-row safety property: task cost is
     O(cap²) however correlated the corpus is."""
     from quarrycore_spark import config
-    from quarrycore_spark.operators.ann import ann_lsh_pairs, lsh_band_signatures
+    from quarrycore_spark.operators.ann import ann_lsh_pairs, lsh_band_rows
     from quarrycore_spark.plans.vectorops import LSH_BANDS
 
     emb = _correlated_embeddings(spark, n=300, noise=0.0)
     sizes = (
-        lsh_band_signatures(emb)
+        lsh_band_rows(emb)
         .groupBy("band_idx", "band_sig")
         .count()
         .collect()
@@ -159,41 +166,95 @@ def test_ann_lsh_cap_keeps_small_buckets(spark):
     assert {(0, 1), (0, 2), (1, 2)} <= got
 
 
-def test_ann_topk_query_cap_raises(spark):
+def test_ann_lsh_pairs_batch_boundaries(spark):
+    """Bucket runs of 5 members straddle 3-row Arrow batches; the verify
+    carries the trailing run over, so 3-row batches give the default-batch
+    pairs."""
+    from quarrycore_spark.operators.ann import ann_lsh_pairs
+
+    rng = np.random.default_rng(13)
+
+    def unit(v):  # the integer scores assume unit-norm embeddings
+        return [float(x) for x in v / np.linalg.norm(v)]
+
+    rows = []
+    for c in range(8):  # 8 tight clusters of 5: one bucket of 5 per band
+        centre = unit(rng.standard_normal(DIM))
+        rows += [
+            (10 * c + i, unit(centre + 0.001 * rng.standard_normal(DIM)))
+            for i in range(5)
+        ]
+    rows += [(1000 + i, unit(rng.standard_normal(DIM))) for i in range(30)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def pairs():
+        return sorted(map(tuple, ann_lsh_pairs(emb).collect()))
+
+    default = pairs()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        small = pairs()
+    finally:
+        spark.conf.set(key, old)
+    clusters = {
+        (10 * c + i, 10 * c + j) for c in range(8) for i in range(5) for j in range(i + 1, 5)
+    }
+    assert clusters <= {(r[0], r[1]) for r in default}
+    assert small == default
+
+
+def test_ann_topk_query_cap_raises(spark, monkeypatch):
+    monkeypatch.setattr(vectorops, "QUERY_STRIDE", 1)
+    monkeypatch.setattr(ann, "MAX_BROADCAST_QUERIES", 10)
     emb = _skewed_embeddings(spark, n=30)
     with pytest.raises(RuntimeError, match="query vectors"):
-        ann_topk(emb, stride=1, max_queries=10).count()
+        ann_topk(emb).count()
 
 
 @pytest.mark.parametrize(
-    "kwargs,cent_cap,queries,centroids",
+    "op,strides,caps,queries,centroids",
     [
-        (dict(stride=1, cent_stride=31, max_queries=10), 200_000,
+        (ivf_topk, (1, 31), (10, 200_000),
          "30 (cap 10, stride=1)", "1 (cap 200000, cent_stride=31)"),
-        (dict(stride=50, cent_stride=1), 10,
+        (ivf_topk, (50, 1), (200_000, 10),
          "1 (cap 200000, stride=50)", "30 (cap 10, cent_stride=1)"),
+        # one class: the limit (cap + 1) stops the collect at 11 rows
+        (ann_topk, (1, 31), (10, 200_000), "11 (cap 10, stride=1)", None),
+        (ivf_assignments, (50, 1), (200_000, 10),
+         None, "11 (cap 10, cent_stride=1)"),
     ],
-    ids=["queries-over", "centroids-over"],
+    ids=["queries-over", "centroids-over", "ann_topk-queries-over",
+         "ivf_assignments-centroids-over"],
 )
 def test_ivf_topk_cap_error_gives_both_classes(
-    spark, monkeypatch, kwargs, cent_cap, queries, centroids
+    spark, monkeypatch, op, strides, caps, queries, centroids
 ):
-    """Whichever class is over its cap, the error reports both classes'
-    collected counts against their caps and strides."""
-    monkeypatch.setattr(ann, "MAX_BROADCAST_CENTROIDS", cent_cap)
+    """Whichever class is over its cap, the error reports every collected
+    class's count against its cap and stride, in one format for all three
+    operators that broadcast sampled rows."""
+    monkeypatch.setattr(vectorops, "QUERY_STRIDE", strides[0])
+    monkeypatch.setattr(vectorops, "CENT_STRIDE", strides[1])
+    monkeypatch.setattr(ann, "MAX_BROADCAST_QUERIES", caps[0])
+    monkeypatch.setattr(ann, "MAX_BROADCAST_CENTROIDS", caps[1])
     emb = _skewed_embeddings(spark, n=30)
     with pytest.raises(RuntimeError) as err:
-        ivf_topk(emb, **kwargs)
+        op(emb)
     msg = str(err.value)
-    assert f"query vectors: {queries}" in msg
-    assert f"centroids: {centroids}" in msg
+    for label, want in (("query vectors", queries), ("centroids", centroids)):
+        if want is None:
+            assert label not in msg
+        else:
+            assert f"{label}: {want}" in msg
 
 
-def test_ann_topk_handles_batch_smaller_than_k(spark):
+def test_ann_topk_handles_batch_smaller_than_k(spark, monkeypatch):
     """Partial top-k per batch must cope with batches smaller than k and
     with the query row itself appearing in the batch."""
+    monkeypatch.setattr(vectorops, "QUERY_STRIDE", 1)
     emb = _skewed_embeddings(spark, n=6).repartition(6)  # ~1 row per batch
-    out = ann_topk(emb, k=10, stride=1).collect()
+    out = ann_topk(emb).collect()
     by_q = {}
     for r in out:
         by_q.setdefault(r["query_id"], []).append(r)

@@ -34,22 +34,25 @@ def test_read_url_list(spark, tmp_path):
     assert len(rows) == 3  # blanks + comments dropped
 
 
-def test_embedding_dup_pairs_blocking_invariant(spark):
+def test_embedding_dup_pairs_blocking_invariant(spark, monkeypatch):
     """The block-pair self-join must produce the identical pair set for any
     block count (each unordered pair lands in exactly one group)."""
-    from quarrycore_spark.operators.ann import embedding_dup_pairs
+    from quarrycore_spark.operators import ann
     from quarrycore_spark.sources.tables import load
 
     emb = load(spark, "/root/testdata/sf0.001", "embeddings")["embeddings"]
 
-    def pairs(n_blocks):
+    def pairs(floor):
+        # a table this small resolves to the block-count floor
+        if floor is not None:
+            monkeypatch.setattr(ann, "MIN_BLOCKS", floor)
         return sorted(
             (r["a_id"], r["b_id"], r["dot"])
-            for r in embedding_dup_pairs(emb, n_blocks=n_blocks).collect()
+            for r in ann.embedding_dup_pairs(emb).collect()
         )
 
-    # None = derive from table size (resolves to the floor of 8 here)
-    p1, p3, p8, pauto = pairs(1), pairs(3), pairs(8), pairs(None)
+    # None = the default floor, before any is set
+    pauto, p1, p3, p8 = pairs(None), pairs(1), pairs(3), pairs(8)
     assert p1 == p3 == p8 == pauto
     assert len(p1) > 0
 
