@@ -16,9 +16,13 @@ Three hashing families coexist:
   same shingle/permutation/banding structure, ~300× cheaper per doc;
 * the *datasketch family* (``operators/datasketch_compat.py``): a bit-exact
   reimplementation of the public datasketch MinHash scheme (sha1→uint32,
-  universal hashing mod 2^61-1, seed 1), selectable end-to-end via
+  universal hashing mod 2^61-1, seed 1), banded at its S-curve optimum for
+  ``jaccard_threshold_pct``/``num_perm``, selectable end-to-end via
   ``run_pipeline(..., family="datasketch")`` for recall parity with the
   reference (src/quarrycore/dedup/minhash_redis.py:186-202).
+
+``signatures.with_signatures(docs, cfg, family)`` is the one entry point
+for all three; any other family name raises ValueError.
 """
 
 from __future__ import annotations

@@ -31,7 +31,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from quarrycore_spark.config import DS_MAX_HASH, DS_MERSENNE_61, DS_SEED
+from quarrycore_spark.config import DS_MAX_HASH, DS_MERSENNE_61, DS_SEED, DedupConfig
+from quarrycore_spark.operators._partitioning import spread
+from quarrycore_spark.operators.lsh import _MAX_BANDS
+from quarrycore_spark.operators.signatures import (
+    char_shingles,
+    normalize_text,
+    poly_simhash,
+)
 
 _HASH_RANGE = 1 << 32
 
@@ -129,20 +136,19 @@ def optimal_param(
     return opt
 
 
-DS_SIG_SCHEMA = "doc_id bigint, ds_sig array<bigint>"
-DS_BANDED_SCHEMA = (
-    "doc_id bigint, content_hash string, sig array<bigint>, bands array<bigint>"
-)
-# The full pipeline stage shape. It matches signatures.SIG_SCHEMA's column
+# The pipeline stage shape. It matches signatures.SIG_SCHEMA's column
 # CONTRACT (same names/order; the simhash stage is independent of the
 # minhash scheme, so the ds family carries the poly-family simhash
 # alongside its own sig/bands) but NOT its element types: ds signature
 # values reach 2^32 and genuinely need array<bigint>, while the poly
 # family packs into array<int>. A checkpoint written by one family is
-# therefore NOT schema-identical under the other — resumed checkpoints
-# are family-specific (the resume manifest's input-identity guard keys on
-# the input, and a family switch must re-run from scratch).
-DS_PIPELINE_SCHEMA = DS_BANDED_SCHEMA + ", simhash bigint"
+# therefore NOT schema-identical under the other, so a resumed pipeline
+# must not switch families: run_pipeline records the family in its
+# manifest and refuses to resume under a different one.
+DS_PIPELINE_SCHEMA = (
+    "doc_id bigint, content_hash string, sig array<bigint>, "
+    "bands array<bigint>, simhash bigint"
+)
 
 _BAND_MULT = 1000003
 _M31 = (1 << 31) - 1
@@ -162,83 +168,49 @@ def band_hashes(sig: np.ndarray, n_bands: int, n_rows: int) -> np.ndarray:
     return out
 
 
-def with_datasketch_signatures(
-    docs: DataFrame,
-    shingle_size: int = 7,
-    num_perm: int = 128,
-    seed: int = DS_SEED,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    banding: tuple[int, int] | None = None,
-    simhash: bool = False,
-    simhash_bits: int | None = None,
-) -> DataFrame:
-    """Arrow-batched datasketch-scheme signatures over the same normalized
-    7-char shingles as the default family.
+def with_datasketch_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """docs(doc_id, text, ...) → DS_PIPELINE_SCHEMA: Arrow-batched
+    datasketch-scheme signatures (seed ``DS_SEED``) over the same
+    normalized ``cfg.shingle_size``-char shingles as the default family.
 
-    With ``banding=(b, r)`` (e.g. from ``optimal_param``), emits the
-    (doc_id, content_hash, sig, bands) shape the LSH operators
-    (operators/lsh.py verified_pairs / candidate_pairs) consume — a drop-in
-    signature family for the pipeline's near-dup stage. ``simhash=True``
-    additionally carries the (family-independent) poly SimHash so the frame
-    satisfies the full pipeline stage contract (signatures.SIG_SCHEMA);
-    ``simhash_bits`` sets its width (defaults to DEFAULT_CONFIG's) and must
-    match the DedupConfig the downstream Hamming blocking reads."""
-    import hashlib as _hl
-
-    from quarrycore_spark.operators.signatures import (
-        char_shingles,
-        normalize_text,
-        poly_simhash,
-    )
-
-    if banding is not None:
-        assert banding[0] <= 1024, (
-            "bandings above 1024 bands break the fused LSH bucket-key "
-            "injectivity (operators/lsh.py _MAX_BANDS)"
+    The banding is datasketch's S-curve optimum for
+    ``cfg.jaccard_threshold_pct`` and ``cfg.num_perm`` (``optimal_param``),
+    so the LSH operators (operators/lsh.py) consume the frame as they do
+    signatures.with_signatures'; the (family-independent) poly SimHash
+    rides along at ``cfg.simhash_bits``."""
+    nb, nr = optimal_param(cfg.jaccard_threshold_pct / 100, cfg.num_perm)
+    if nb > _MAX_BANDS:
+        raise ValueError(
+            f"{nb} bands break the fused LSH bucket-key injectivity "
+            f"(operators/lsh.py _MAX_BANDS = {_MAX_BANDS})"
         )
-    if simhash and banding is None:
-        raise ValueError("simhash=True requires banding (pipeline shape)")
-    if simhash_bits is None:
-        from quarrycore_spark.config import DEFAULT_CONFIG as _DC
-
-        simhash_bits = _DC.simhash_bits
-    _sim_bits = simhash_bits
-
-    a, b = permutations(num_perm, seed)
+    a, b = permutations(cfg.num_perm)
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            nts = [normalize_text(t) for t in pdf[text_col].astype(str)]
+            nts = [normalize_text(t) for t in pdf["text"].astype(str)]
             sigs = [
-                minhash_signature(char_shingles(nt, shingle_size), a, b)
+                minhash_signature(char_shingles(nt, cfg.shingle_size), a, b)
                 for nt in nts
             ]
-            if banding is None:
-                yield pd.DataFrame({"doc_id": pdf[id_col].values, "ds_sig": sigs})
-            else:
-                nb, nr = banding
-                out = {
-                    "doc_id": pdf[id_col].values,
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].values,
                     "content_hash": [
-                        _hl.sha256(nt.encode("utf-8")).hexdigest() for nt in nts
+                        hashlib.sha256(nt.encode("utf-8")).hexdigest() for nt in nts
                     ],
                     "sig": sigs,
                     "bands": [band_hashes(s, nb, nr) for s in sigs],
-                }
-                if simhash:
-                    out["simhash"] = pd.array(
-                        [poly_simhash(nt, shingle_size, _sim_bits) for nt in nts],
+                    "simhash": pd.array(
+                        [
+                            poly_simhash(nt, cfg.shingle_size, cfg.simhash_bits)
+                            for nt in nts
+                        ],
                         dtype="int64",
-                    )
-                yield pd.DataFrame(out)
+                    ),
+                }
+            )
 
-    if banding is None:
-        schema = DS_SIG_SCHEMA
-    elif simhash:
-        schema = DS_PIPELINE_SCHEMA
-    else:
-        schema = DS_BANDED_SCHEMA
-    from quarrycore_spark.operators._partitioning import spread
-
-    return spread(docs.select(id_col, text_col)).mapInPandas(compute, schema=schema)
+    return spread(docs.select("doc_id", "text")).mapInPandas(
+        compute, schema=DS_PIPELINE_SCHEMA
+    )

@@ -1,6 +1,6 @@
-"""Batched md5-prefix gram hashing — the Arrow kernel behind the
-md5-family gram queries (doc_fingerprints, substring_pairs,
-trigram_jaccard_pairs).
+"""md5-prefix gram hashing — the per-document hash functions the md5-family
+gram queries (doc_fingerprints, substring_pairs, trigram_jaccard_pairs)
+run inside the one per-document Arrow kernel, ``signatures.doc_hashes``.
 
 Semantics contract: every value equals the SQL dialect's
 ``hex_int(expr, 15)`` = ``cast(conv(substring(md5(expr), 1, 15), 16, 10)

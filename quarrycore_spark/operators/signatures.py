@@ -22,7 +22,7 @@ Reference semantics covered (SURVEY.md §2.3):
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from quarrycore_spark.config import DEFAULT_CONFIG, MERSENNE_31, DedupConfig
 from quarrycore_spark.extraction.canonical import _collapse_ws
 from quarrycore_spark.operators._kernel_log import kernel_span
+from quarrycore_spark.operators._partitioning import spread
 
 # sig/bands values are residues mod the 31-bit Mersenne prime, so INT32
 # carries them exactly — half the bytes of bigint through the Arrow IPC,
@@ -55,6 +56,32 @@ def normalize_text(text: str) -> str:
     Matches dialect.norm_text: collapse ASCII whitespace runs to one space
     (Java \\s semantics, see canonical._collapse_ws), trim, lowercase."""
     return _collapse_ws(text).lower()
+
+
+def doc_hashes(docs: DataFrame, hashes: Callable[[str], np.ndarray]) -> DataFrame:
+    """docs(doc_id, text, ...) → (doc_id bigint, gs array<bigint>), one row
+    per document: gs = hashes(normalize_text(text)).
+
+    The one Arrow boundary of the per-document text-hash levels (L-gram
+    buckets, winnow fingerprints, word trigrams, fingerprint sketches):
+    each document crosses it once, as one array row, and consumers
+    explode or reduce ``gs`` on the Spark side."""
+
+    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].to_numpy(np.int64),
+                    "gs": [
+                        hashes(normalize_text(t)).astype(np.int64)
+                        for t in pdf["text"].astype(str)
+                    ],
+                }
+            )
+
+    return spread(docs.select("doc_id", "text")).mapInPandas(
+        compute, schema="doc_id bigint, gs array<bigint>"
+    )
 
 
 def char_shingles(nt: str, k: int) -> list[str]:
@@ -420,17 +447,28 @@ def _chunk_signatures_poly(
 def with_signatures(
     docs: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     family: str = "md5",
 ) -> DataFrame:
-    """docs(id, text, ...) → (id, content_hash, sig, bands, simhash).
+    """docs(doc_id, text, ...) → (doc_id, content_hash, sig, bands, simhash).
 
     Arrow-batched; each task processes its partition independently — no
     shuffle, scales linearly with executors. family="md5" is the
     oracle-parity scheme; family="poly" is the vectorized production
-    scheme (same signature structure, different shingle hash).
+    scheme (same signature structure, different shingle hash);
+    family="datasketch" is the reference's MinHash scheme
+    (operators/datasketch_compat.py), whose sig/bands are array<bigint>.
     """
+    if family == "datasketch":
+        from quarrycore_spark.operators.datasketch_compat import (
+            with_datasketch_signatures,
+        )
+
+        return with_datasketch_signatures(docs, cfg)
+    if family not in ("md5", "poly"):
+        raise ValueError(
+            f"unknown signature family {family!r}: "
+            "expected 'md5', 'poly' or 'datasketch'"
+        )
     a = np.array([p[0] for p in cfg.minhash_perms], dtype=np.int64)
     b = np.array([p[1] for p in cfg.minhash_perms], dtype=np.int64)
 
@@ -438,7 +476,7 @@ def with_signatures(
         for pdf in batches:
             n = len(pdf)
             with kernel_span("sig", n):
-                texts = pdf[text_col].astype(str).tolist()
+                texts = pdf["text"].astype(str).tolist()
                 if family == "poly":
                     ch, sig_m, bands_m, sim = _batch_signatures_poly(texts, cfg, a, b)
                     sig = list(sig_m.astype(np.int32))
@@ -455,7 +493,7 @@ def with_signatures(
                         )
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].values,
+                    "doc_id": pdf["doc_id"].values,
                     "content_hash": ch,
                     "sig": sig,
                     "bands": bands,
@@ -463,8 +501,6 @@ def with_signatures(
                 }
             )
 
-    from quarrycore_spark.operators._partitioning import spread
-
-    return spread(docs.select(id_col, text_col)).mapInPandas(
+    return spread(docs.select("doc_id", "text")).mapInPandas(
         compute, schema=SIG_SCHEMA
     )

@@ -16,9 +16,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from quarrycore_spark import config
+from quarrycore_spark.functions import dialect as D
 from quarrycore_spark.operators.lsh import capped
-
-_NORM = "lower(trim(regexp_replace(text, '\\\\s+', ' ')))"
+from quarrycore_spark.operators.md5grams import window_hashes60
+from quarrycore_spark.operators.signatures import doc_hashes
 
 
 def winnow_fingerprints(nt: str, k: int, w: int) -> np.ndarray:
@@ -76,38 +77,12 @@ def winnow_doc_pairs(
     detection guarantee). k = min_overlap//2, w = min_overlap - k + 1."""
     k = max(min_overlap // 2, 4)
     w = min_overlap - k + 1
-
-    def compute(it):
-        import pandas as pd
-
-        from quarrycore_spark.operators.signatures import normalize_text
-
-        for pdf in it:
-            ids, gs = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col].astype(str)):
-                fps = winnow_fingerprints(normalize_text(text), k, w)
-                ids.append(np.full(len(fps), doc_id, dtype=np.int64))
-                gs.append(fps.astype(np.int64))
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {"doc_id": np.concatenate(ids), "g": np.concatenate(gs)}
-            )
-
-    from quarrycore_spark.operators._partitioning import spread
-
-    grams = spread(docs.select(id_col, text_col)).mapInPandas(
-        compute, schema="doc_id bigint, g bigint"
-    )
-    return _capped_bucket_pairs(grams)
+    docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    fps = doc_hashes(docs, lambda nt: winnow_fingerprints(nt, k, w))
+    return _capped_bucket_pairs(fps.select("doc_id", F.explode("gs").alias("g")))
 
 
-def gram_doc_pairs(
-    docs: DataFrame,
-    l_gram: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def gram_doc_pairs(docs: DataFrame, l_gram: int) -> DataFrame:
     """(a_id, b_id, shared_grams): doc pairs sharing >=1 common substring of
     length >= l_gram. Grams occurring in more than ``config.LSH_BUCKET_CAP``
     docs are dropped (boilerplate guard, deterministic).
@@ -116,29 +91,8 @@ def gram_doc_pairs(
     identical integers to the L-gram SQL of the DuckDB oracle
     (``registry._substring_pairs_sql``), but C md5 over Arrow batches
     instead of an interpreted transform() lambda."""
-    from quarrycore_spark.operators._partitioning import spread
-    from quarrycore_spark.operators.md5grams import window_hashes60
-    from quarrycore_spark.operators.signatures import normalize_text
-
-    def emit_grams(it):
-        for pdf in it:
-            ids, gs = [], []
-            for doc_id, text in zip(
-                pdf[id_col].to_numpy(np.int64), pdf[text_col].astype(str)
-            ):
-                h = window_hashes60(normalize_text(text), l_gram)
-                ids.append(np.full(len(h), doc_id, dtype=np.int64))
-                gs.append(h)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {"doc_id": np.concatenate(ids), "g": np.concatenate(gs)}
-            )
-
-    grams = spread(docs.select(id_col, text_col)).mapInPandas(
-        emit_grams, schema="doc_id bigint, g bigint"
-    )
-    return _capped_bucket_pairs(grams)
+    grams = doc_hashes(docs, lambda nt: window_hashes60(nt, l_gram))
+    return _capped_bucket_pairs(grams.select("doc_id", F.explode("gs").alias("g")))
 
 
 # ---------------------------------------------------------------------------
@@ -339,7 +293,9 @@ def substring_extents(
     bounded by the gram buckets' cap, so texts travel to pairs — at scale
     this is a broadcast-or-shuffle join on doc_id, never an all-pairs op.
     """
-    nt = docs.select(F.col(id_col).alias("doc_id"), F.expr(_NORM).alias("nt"))
+    nt = docs.select(
+        F.col(id_col).alias("doc_id"), F.expr(D.norm_text(text_col, D.SPARK)).alias("nt")
+    )
     ends = (
         cand.select(
             "a_id", "b_id", F.posexplode(F.array("a_id", "b_id")).alias("side", "doc_id")

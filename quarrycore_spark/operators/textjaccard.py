@@ -1,9 +1,9 @@
 """Word-trigram exact-Jaccard dedup as a DataFrame operator.
 
 Same semantics/constants as the SQL in plans/textops.py (which serves as
-the DuckDB oracle); this implementation persists the exploded gram table so
-the cap-filter, the self-join, and the size lookups share one computation
-instead of re-deriving the trigram arrays per reference (Catalyst inlines
+the DuckDB oracle); this implementation persists the per-doc trigram arrays
+so the cap-filter, the self-join, and the size lookups share one computation
+instead of re-deriving them per reference (Catalyst inlines
 multi-referenced CTEs).
 """
 
@@ -15,36 +15,16 @@ from pyspark.sql import functions as F
 from quarrycore_spark import config
 from quarrycore_spark.operators._cache import track
 from quarrycore_spark.operators.lsh import capped
+from quarrycore_spark.operators.md5grams import word_trigram_hashes60
+from quarrycore_spark.operators.signatures import doc_hashes
 
 
-def trigram_jaccard_pairs(
-    docs: DataFrame, threshold_pct: int,
-    id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
+def trigram_jaccard_pairs(docs: DataFrame, threshold_pct: int) -> DataFrame:
     """Trigram hashing runs in the batched md5 kernel
     (operators/md5grams.py) — identical integers to the SQL formulation
     in plans/textops.py (which remains the DuckDB oracle), but C md5 over
     Arrow batches instead of an interpreted transform() lambda."""
-    from quarrycore_spark.operators._partitioning import spread
-    from quarrycore_spark.operators.md5grams import word_trigram_hashes60
-    from quarrycore_spark.operators.signatures import normalize_text
-
-    def emit_tg(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            ids = pdf[id_col].to_numpy(np.int64)
-            tgs = [
-                word_trigram_hashes60(normalize_text(text))
-                for text in pdf[text_col].astype(str)
-            ]
-            yield pd.DataFrame({"doc_id": ids, "tg": tgs})
-
-    t = spread(docs.select(id_col, text_col)).mapInPandas(
-        emit_tg, schema="doc_id bigint, tg array<bigint>"
-    )
-    t = track(t)
+    t = track(doc_hashes(docs, word_trigram_hashes60))
     # gram rows carry the doc's distinct-gram count so (a) the final
     # union computation needs no size joins (n_a/n_b ride the groupBy
     # keys, on which they are functionally dependent) and (b) the join
@@ -54,7 +34,7 @@ def trigram_jaccard_pairs(
     # final filter — dropping it inside the join changes nothing in the
     # output (exact, integer arithmetic; boundary kept by >=) and cuts
     # the candidate-pair mass ~35% on the bench corpus (127M -> 83M).
-    gx = t.select("doc_id", F.size("tg").alias("n_g"), F.explode("tg").alias("g"))
+    gx = t.select("doc_id", F.size("gs").alias("n_g"), F.explode("gs").alias("g"))
     # 2..cap bucket filter as a window count over the self-join's own
     # partitioning (one wide shuffle, no cached exploded table)
     gk = capped(gx, "g", "doc_id", config.LSH_BUCKET_CAP)

@@ -247,14 +247,33 @@ def run_pipeline(
     cascade_threshold: int = 0,
     family: str = "poly",
 ) -> PipelineResult:
-    """family selects the near-dup signature scheme end-to-end:
-    "poly" (default) — the vectorized rolling-hash family; "md5" — the
-    oracle-parity scheme; "datasketch" — the reference's actual MinHash
-    scheme (sha1→uint32, mod 2^61-1) with its S-curve-optimal banding,
-    so recall gates against reference semantics exercise THIS production
-    path (tests/test_pipeline.py::test_pipeline_recall_datasketch_family)."""
+    """family selects the near-dup signature scheme end-to-end (see
+    signatures.with_signatures): "poly" (default) — the vectorized
+    rolling-hash family; "md5" — the oracle-parity scheme; "datasketch" —
+    the reference's actual MinHash scheme (sha1→uint32, mod 2^61-1) with
+    its S-curve-optimal banding, so recall gates against reference
+    semantics exercise THIS production path
+    (tests/test_pipeline.py::test_pipeline_recall_datasketch_family).
+
+    With resume=True, a manifest in out_dir written under another family,
+    cascade_threshold or cfg raises ValueError."""
     os.makedirs(out_dir, exist_ok=True)
     man = _load_manifest(out_dir) if resume else {"stages": {}}
+    # checkpoints are reusable only under the settings that wrote them (the
+    # manifest records them with the first stage write); the identity of
+    # the input pages is not recorded
+    settings = {"family": family, "cascade_threshold": cascade_threshold, "cfg": repr(cfg)}
+    recorded = man.setdefault("settings", settings)
+    differ = [
+        f"{k} ({recorded.get(k)!r} recorded, {v!r} given)"
+        for k, v in settings.items()
+        if recorded.get(k) != v
+    ]
+    if differ:
+        raise ValueError(
+            f"cannot resume {out_dir}: its checkpoints were written with other "
+            f"settings: {'; '.join(differ)}"
+        )
 
     # ---- stage 1: extraction (P1-P6, P11) -------------------------------
     # spread the (CPU-bound) extraction across all cores when the input has
@@ -333,20 +352,7 @@ def run_pipeline(
         # content_hash is dropped before the checkpoint: the pipeline's
         # exact layer reads extraction's hash, so the 64-hex column would
         # be ~64 B/doc of write+read the pair stages never touch.
-        if family == "datasketch":
-            from quarrycore_spark.operators.datasketch_compat import (
-                optimal_param,
-                with_datasketch_signatures,
-            )
-
-            nb, nr = optimal_param(cfg.jaccard_threshold_pct / 100, cfg.num_perm)
-            return with_datasketch_signatures(
-                survivors, cfg.shingle_size, cfg.num_perm,
-                banding=(nb, nr), simhash=True, simhash_bits=cfg.simhash_bits,
-            ).drop("content_hash")
-        # "poly" = the vectorized rolling-hash family (signatures.py) —
-        # same shingle/permutation/banding structure, ~300× cheaper per doc
-        return with_signatures(survivors, cfg, family=family).drop("content_hash")
+        return with_signatures(survivors, cfg, family).drop("content_hash")
 
     sigs = _stage(spark, out_dir, man, "signatures", build_sigs, resume)
 
@@ -382,8 +388,8 @@ def run_pipeline(
         )
 
         mo = cfg.min_overlap
-        cand = winnow_doc_pairs(survivors, mo, id_col="doc_id", text_col="text")
-        return substring_extents(survivors, cand, mo, id_col="doc_id", text_col="text")
+        cand = winnow_doc_pairs(survivors, mo)
+        return substring_extents(survivors, cand, mo)
 
     if substring:
         _stage(spark, out_dir, man, "substring_pairs", build_substring, resume)

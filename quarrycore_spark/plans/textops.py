@@ -338,6 +338,13 @@ register(Query("lang_id", "P8: stopword-vote language identification", _lang_id)
 
 FP_K = 16
 _FP_MOD = 1000000007
+# Spark-dialect (min, count, sum mod p) reduction of a doc's distinct gram
+# hashes `gs`: the SQL text and the Arrow-kernel path both use it
+_FP_SKETCH = [
+    "array_min(gs) AS fp_min",
+    "size(gs) AS fp_cnt",
+    f"aggregate(transform(gs, g -> g % {_FP_MOD}), 0L, (a, x) -> a + x) AS fp_sum",
+]
 
 
 def _doc_fingerprints(dialect: str) -> str:
@@ -350,10 +357,7 @@ def _doc_fingerprints(dialect: str) -> str:
             f"else array_distinct(transform(sequence(0, length(nt) - {FP_K}), "
             f"i -> {D.hex_int(f'substring(nt, i + 1, {FP_K})', 15, dialect)})) end"
         )
-        agg = (
-            f"array_min(gs) AS fp_min, size(gs) AS fp_cnt, "
-            f"aggregate(transform(gs, g -> g % {_FP_MOD}), 0L, (a, x) -> a + x) AS fp_sum"
-        )
+        agg = ", ".join(_FP_SKETCH)
     else:
         grams = (
             f"case when length(nt) < {FP_K} then [{D.hex_int('nt', 15, dialect)}] "
@@ -377,39 +381,13 @@ def _spark_doc_fingerprints(spark, sf_dir):
     which stays the DuckDB oracle — but hashlib's C md5 over memoryview
     windows instead of an interpreted transform() lambda, and the
     single-row-group scan spread across cores. sf1.0: 49.7 s → ~1 s."""
-    import numpy as np
-    import pandas as pd
-
-    from quarrycore_spark.operators._partitioning import spread
     from quarrycore_spark.operators.md5grams import window_hashes60
-    from quarrycore_spark.operators.signatures import normalize_text
+    from quarrycore_spark.operators.signatures import doc_hashes
     from quarrycore_spark.sources.tables import load
 
     docs = load(spark, sf_dir, "documents")["documents"]
-
-    def compute(it):
-        for pdf in it:
-            n = len(pdf)
-            mins = np.empty(n, dtype=np.int64)
-            cnts = np.empty(n, dtype=np.int32)
-            sums = np.empty(n, dtype=np.int64)
-            for j, text in enumerate(pdf["text"].astype(str)):
-                gs = window_hashes60(normalize_text(text), FP_K)
-                mins[j] = gs.min()
-                cnts[j] = len(gs)
-                sums[j] = (gs % _FP_MOD).sum()
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(np.int64),
-                    "fp_min": mins,
-                    "fp_cnt": cnts,
-                    "fp_sum": sums,
-                }
-            )
-
-    return spread(docs.select("doc_id", "text")).mapInPandas(
-        compute, schema="doc_id bigint, fp_min bigint, fp_cnt int, fp_sum bigint"
-    )
+    gs = doc_hashes(docs, lambda nt: window_hashes60(nt, FP_K))
+    return gs.selectExpr("doc_id", *_FP_SKETCH)
 
 
 register(

@@ -77,7 +77,7 @@ def test_spark_datasketch_signatures(spark):
          (3, "a completely different document body here")],
         "doc_id long, text string",
     )
-    rows = {r["doc_id"]: np.array(r["ds_sig"]) for r in with_datasketch_signatures(docs).collect()}
+    rows = {r["doc_id"]: np.array(r["sig"]) for r in with_datasketch_signatures(docs, CFG).collect()}
     assert (rows[1] == rows[2]).all()
     assert not (rows[1] == rows[3]).all()
     # python-side reference equality

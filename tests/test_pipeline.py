@@ -162,6 +162,33 @@ def test_pipeline_resume_identical(spark, corpus, pipeline_result):
     assert first == second
 
 
+def test_pipeline_resume_refuses_other_settings(spark, tmp_path):
+    """Resuming over checkpoints written under another family,
+    cascade_threshold or cfg raises, names each differing setting, and
+    leaves the manifest as it was."""
+    import os
+
+    from quarrycore_spark.config import DedupConfig
+
+    out = str(tmp_path / "settings")
+    pages = pages_dataframe(spark, generate_pages(40, seed=5))
+    run_pipeline(spark, pages, out, substring=False)
+    manifest = os.path.join(out, "_manifest.json")
+    with open(manifest) as f:
+        before = f.read()
+    with pytest.raises(ValueError) as err:
+        run_pipeline(
+            spark, pages, out, cfg=DedupConfig(min_overlap=50),
+            substring=False, cascade_threshold=1, family="datasketch",
+        )
+    msg = str(err.value)
+    assert "family ('poly' recorded, 'datasketch' given)" in msg
+    assert "cascade_threshold (0 recorded, 1 given)" in msg
+    assert "min_overlap=100" in msg and "min_overlap=50" in msg
+    with open(manifest) as f:
+        assert f.read() == before
+
+
 def test_containment_pairs_detected(spark, corpus, pipeline_result):
     """Population 6 (doc B = doc A + extra) must surface in the substring
     stage with the contains/contained_in classification

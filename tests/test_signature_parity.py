@@ -205,3 +205,65 @@ def test_batch_poly_parity_across_chunk_budget():
         assert (sig == sig_b[j]).all(), j
         assert (bands == bands_b[j]).all(), j
         assert sim == sim_b[j], j
+
+
+# empty, whitespace-only, shorter than k, exactly k (k = 15, 30 chars and
+# 3 words), ASCII separators \x1c-\x1f, NBSP, U+2028, U+3000, a combining
+# mark and an astral code point
+HOSTILE_TEXTS = [
+    "",
+    " \t\n\r\x0b\x0c  ",
+    "short",
+    "a" * 15,
+    "b" * 30,
+    "one two three",
+    "unit\x1cgroup\x1drecord\x1eunit\x1f separators between the words here",
+    "no\u00a0break\u00a0space keeps its place in a line of sample text",
+    "line\u2028separator and\u3000ideographic space in one mixed document",
+    "cafe\u0301 combining marks de\u0301ja\u0300 vu in the running text body",
+    "astral \U0001d518\U0001f600 code points outside the basic plane ok",
+    "The Quick  Brown Fox\tjumps over the lazy dog and keeps on running " * 3,
+]
+
+
+@pytest.mark.parametrize("kernel", ["window30", "trigram", "winnow15x16"])
+def test_doc_hashes_hostile_text(spark, kernel):
+    """doc_hashes gives each doc the per-doc Python hashes of its
+    normalized text, over hostile characters and 2-row Arrow batches."""
+    from functools import partial
+
+    from quarrycore_spark.operators.md5grams import (
+        window_hashes60,
+        word_trigram_hashes60,
+    )
+    from quarrycore_spark.operators.signatures import doc_hashes
+    from quarrycore_spark.operators.substring import winnow_fingerprints
+
+    hashes = {
+        "window30": partial(window_hashes60, k=30),
+        "trigram": word_trigram_hashes60,
+        "winnow15x16": partial(winnow_fingerprints, k=15, w=16),
+    }[kernel]
+    docs = spark.createDataFrame(
+        list(enumerate(HOSTILE_TEXTS)), "doc_id long, text string"
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = {r.doc_id: list(r.gs) for r in doc_hashes(docs, hashes).collect()}
+    finally:
+        spark.conf.set(key, old)
+    want = {
+        i: hashes(normalize_text(t)).astype(np.int64).tolist()
+        for i, t in enumerate(HOSTILE_TEXTS)
+    }
+    assert got == want
+
+
+def test_with_signatures_rejects_unknown_family(spark):
+    from quarrycore_spark.operators.signatures import with_signatures
+
+    docs = spark.createDataFrame([(1, "text")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="'md5', 'poly' or 'datasketch'"):
+        with_signatures(docs, CFG, family="Poly")

@@ -203,3 +203,29 @@ def test_substring_extents_batch_boundaries(spark):
         spark.conf.set(key, old)
     assert len(default) == 55
     assert small == default
+
+
+def test_substring_ops_read_named_columns(spark):
+    """winnow_doc_pairs and substring_extents read the id and text columns
+    they are given."""
+    from pyspark.sql import functions as F
+
+    from quarrycore_spark.operators.substring import winnow_doc_pairs
+
+    base = "the quick brown fox jumps over the lazy dog and keeps running far away " * 3
+    rows = [
+        (1, base),
+        (2, "PREFIX " + base + " extra trailing content appended beyond the shared part"),
+        (3, "completely different text with no long overlap at all whatsoever xyz"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    named = docs.select(F.col("doc_id").alias("id"), F.col("text").alias("body"))
+
+    def run(frame, **cols):
+        cand = winnow_doc_pairs(frame, 30, **cols)
+        ext = substring_extents(frame, cand, 30, **cols)
+        return sorted(map(tuple, cand.collect())), sorted(map(tuple, ext.collect()))
+
+    default = run(docs)
+    assert [p[:2] for p in default[0]] == [(1, 2)] and len(default[1]) == 1
+    assert run(named, id_col="id", text_col="body") == default
