@@ -69,10 +69,20 @@ def _int_matmul(A: np.ndarray, Bt: np.ndarray) -> np.ndarray:
     return A @ Bt
 
 
+# Largest quantized norm² (na) the integer scores accept. The widest
+# product is _int_scores' dot²·10⁵; the pair predicates compare 10⁴·dot²
+# with pct²·na·nb (pct <= 100), which is no wider. By Cauchy-Schwarz
+# dot² <= na·nb <= N² when both norms² are <= N, so every product stays
+# <= 10⁵·N², inside int64 while N <= isqrt((2⁶³-1) // 10⁵) = 9,603,838:
+# ‖q‖ <= 3,099, i.e. ‖embedding‖ <= ~3.1 at the ×1000 quantization.
+# Unit-norm embeddings have na ≈ 10⁶; quantized_frame raises above it.
+MAX_QUANTIZED_NORM2 = math.isqrt((2**63 - 1) // 100_000)
+
+
 def _int_scores(dots: np.ndarray, na: np.ndarray, nb: np.ndarray) -> np.ndarray:
     """sign(dot)·(dot²·10⁵ intdiv na·nb) under numpy broadcasting — the
     oracle's score, divided on non-negative ints. All products stay inside
-    int64 (dot²·1e5 <= 3.3e18 < 2^63)."""
+    int64 while na, nb <= MAX_QUANTIZED_NORM2."""
     pos = (dots * dots * 100000) // (na * nb)
     return np.where(dots < 0, -pos, pos)
 
@@ -88,18 +98,24 @@ def quantized_frame(emb: DataFrame, spread: bool = True) -> DataFrame:
     vectors anyway (embedding_dup_pairs' block explode, ivf_topk's
     candidate join): there the extra exchange of fat q-arrays costs more
     than the scan parallelism buys (measured 3.0 vs 9.2 s at sf1.0 for
-    embedding_dup_pairs)."""
+    embedding_dup_pairs). A vector whose na exceeds MAX_QUANTIZED_NORM2
+    raises ValueError: its integer scores would wrap int64."""
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            ids = pdf["vec_id"].to_numpy(np.int64)
             Q = quantize(np.stack(pdf["embedding"].to_numpy()))
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                    "q": list(Q),
-                    "na": (Q * Q).sum(axis=1),
-                }
-            )
+            # checked in float64, which cannot wrap as the int64 na can
+            n2 = np.square(Q, dtype=np.float64).sum(axis=1)
+            if (n2 > MAX_QUANTIZED_NORM2).any():
+                i = int(np.argmax(n2 > MAX_QUANTIZED_NORM2))
+                raise ValueError(
+                    f"vec_id {ids[i]}: quantized norm² {n2[i]:.6g} exceeds "
+                    f"MAX_QUANTIZED_NORM2 = {MAX_QUANTIZED_NORM2} "
+                    "(‖embedding‖ > ~3.1); its integer cosine scores would "
+                    "overflow int64"
+                )
+            yield pd.DataFrame({"vec_id": ids, "q": list(Q), "na": (Q * Q).sum(axis=1)})
 
     # spread(): the driver's embeddings table is ONE parquet file with ONE
     # row group, so the scan cannot split and every downstream kernel pass

@@ -444,6 +444,20 @@ def _chunk_signatures_poly(
     return sig, bands, sim
 
 
+# The signature families with_signatures dispatches; run_pipeline checks a
+# family name against this tuple before it runs any stage.
+FAMILIES = ("md5", "poly", "datasketch")
+
+
+def _check_family(family: str) -> None:
+    if family not in FAMILIES:
+        *rest, last = map(repr, FAMILIES)
+        raise ValueError(
+            f"unknown signature family {family!r}: "
+            f"expected {', '.join(rest)} or {last}"
+        )
+
+
 def with_signatures(
     docs: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
@@ -458,17 +472,13 @@ def with_signatures(
     family="datasketch" is the reference's MinHash scheme
     (operators/datasketch_compat.py), whose sig/bands are array<bigint>.
     """
+    _check_family(family)
     if family == "datasketch":
         from quarrycore_spark.operators.datasketch_compat import (
             with_datasketch_signatures,
         )
 
         return with_datasketch_signatures(docs, cfg)
-    if family not in ("md5", "poly"):
-        raise ValueError(
-            f"unknown signature family {family!r}: "
-            "expected 'md5', 'poly' or 'datasketch'"
-        )
     a = np.array([p[0] for p in cfg.minhash_perms], dtype=np.int64)
     b = np.array([p[1] for p in cfg.minhash_perms], dtype=np.int64)
 

@@ -4,6 +4,8 @@ reference's Pipeline.run (src/quarrycore/pipeline.py:584-853):
     pages ──extract──▶ docs ──exact──▶ survivors ──signatures──▶
       LSH verified pairs ∪ SimHash pairs ──CC──▶ clusters ──▶
       docs_dedup + clusters + metrics + lineage tables
+    survivors ──substring (second thread, beside pairs..docs_dedup)──▶
+      substring_pairs
 
 Differences by design (SURVEY §3.1 "Spark translation"):
 * per-URL asyncio stages become whole-corpus DataFrame stages;
@@ -33,6 +35,20 @@ Importing this package in a worker swaps in
 its stat changed, so only a worker's first task pays it; the same 16
 calls then took 3-8 ms.
 
+Two more fixed costs of a warm pass are gone. (1) Spark's cache of
+compiled generated classes held 100 entries, fewer than the ~150 sources
+one pass generates, so every warm pass recompiled 140-144 classes with
+Janino; ``session.CODEGEN_CACHE_ENTRIES`` sizes it to hold a pass.
+(2) The substring stage (~1.2 s of a ~4.9 s pass) feeds neither CC nor
+docs_dedup, so it runs on a second thread, started once the signatures
+stage has materialized ``docs``, beside pairs → clusters → docs_dedup on
+the caller's thread. The thread carries the caller's job group, so the
+job count per pass is unchanged; it is joined before lineage and metrics,
+so no Spark job outlives run_pipeline. Stage walls in metrics.json
+therefore overlap and no longer sum to the pass wall; metrics.json lists
+stages in STAGE_ORDER whichever finishes first. substring=False runs the
+chain alone, as before.
+
 Run it standalone:
     spark-submit --py-files quarrycore_spark.zip -m quarrycore_spark.plans.pipeline \
         (or: python -m quarrycore_spark.plans.pipeline OUT_DIR
@@ -44,11 +60,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,8 +75,16 @@ from quarrycore_spark.extraction.canonical import extract_pages
 from quarrycore_spark.operators._partitioning import spread
 from quarrycore_spark.operators.cc import connected_components
 from quarrycore_spark.operators.lsh import verified_pairs
-from quarrycore_spark.operators.signatures import with_signatures
+from quarrycore_spark.operators.signatures import _check_family, with_signatures
 from quarrycore_spark.operators.simhash import simhash_pairs
+
+
+# metrics.json order: the pipeline's stage order, whichever stage finishes
+# first (substring_pairs runs beside pairs → clusters → docs_dedup)
+STAGE_ORDER = (
+    "extracted", "exact", "signatures", "pairs", "substring_pairs",
+    "clusters", "docs_dedup",
+)
 
 
 @dataclass
@@ -90,10 +116,11 @@ def _save_manifest(out_dir: str, man: dict) -> None:
 
 
 def _stage(
-    spark, out_dir, man, name, builder, resume=True, extra_obs=None,
+    spark, out_dir, man, lock, name, builder, resume=True, extra_obs=None,
 ) -> DataFrame:
     """Run one stage with checkpoint/resume: if the manifest records the
-    stage as complete, read its parquet instead of recomputing."""
+    stage as complete, read its parquet instead of recomputing. Stages on
+    two threads share the manifest; lock guards its updates and saves."""
     path = os.path.join(out_dir, name)
     if resume and name in man["stages"]:
         return spark.read.parquet(man["stages"][name]["path"])
@@ -121,20 +148,20 @@ def _stage(
         obs, F.count(F.lit(1)).alias("n"), *(extra_obs or [])
     ).write.mode("overwrite").parquet(path)
     got = obs.get
-    rows = int(got["n"])
-    if extra_obs:
-        man.setdefault("observations", {})[name] = {
-            k: v for k, v in got.items() if k != "n"
-        }
     # read back with the schema just written: schema inference would run
     # one Spark job per stage to open a footer the driver already knows
     df = spark.read.schema(df.schema).parquet(path)
-    man["stages"][name] = {
-        "path": path,
-        "rows": rows,
-        "wall_s": round(time.time() - t0, 3),
-    }
-    _save_manifest(out_dir, man)
+    with lock:
+        if extra_obs:
+            man.setdefault("observations", {})[name] = {
+                k: v for k, v in got.items() if k != "n"
+            }
+        man["stages"][name] = {
+            "path": path,
+            "rows": int(got["n"]),
+            "wall_s": round(time.time() - t0, 3),
+        }
+        _save_manifest(out_dir, man)
     return df
 
 
@@ -255,8 +282,15 @@ def run_pipeline(
     semantics exercise THIS production path
     (tests/test_pipeline.py::test_pipeline_recall_datasketch_family).
 
-    With resume=True, a manifest in out_dir written under another family,
-    cascade_threshold or cfg raises ValueError."""
+    An unknown family raises ValueError before any stage runs. With
+    resume=True, a manifest in out_dir written under another family,
+    cascade_threshold or cfg raises ValueError.
+
+    The substring stage runs on a second thread beside pairs → clusters →
+    docs_dedup and is joined before this returns; its failure is raised
+    once the chain has finished (a chain failure wins, with the substring
+    one as its __context__)."""
+    _check_family(family)
     os.makedirs(out_dir, exist_ok=True)
     man = _load_manifest(out_dir) if resume else {"stages": {}}
     # checkpoints are reusable only under the settings that wrote them (the
@@ -274,17 +308,22 @@ def run_pipeline(
             f"cannot resume {out_dir}: its checkpoints were written with other "
             f"settings: {'; '.join(differ)}"
         )
+    lock = threading.Lock()
+
+    def stage(name, builder, extra_obs=None) -> DataFrame:
+        return _stage(
+            spark, out_dir, man, lock, name, builder, resume, extra_obs
+        )
 
     # ---- stage 1: extraction (P1-P6, P11) -------------------------------
     # spread the (CPU-bound) extraction across all cores when the input has
     # few parquet splits — but never shuffle the raw HTML if it already has
     # enough partitions (the repartition would move every byte of the corpus)
     src = spread(pages)
-    extracted = _stage(
-        spark, out_dir, man, "extracted",
+    extracted = stage(
+        "extracted",
         lambda: extract_pages(src, cascade_threshold=cascade_threshold)
         .withColumn("doc_id", F.xxhash64("url")),
-        resume,
     )
 
     # ---- stage 2: exact dedup (D1, D2) ----------------------------------
@@ -354,33 +393,17 @@ def run_pipeline(
         # be ~64 B/doc of write+read the pair stages never touch.
         return with_signatures(survivors, cfg, family).drop("content_hash")
 
-    sigs = _stage(spark, out_dir, man, "signatures", build_sigs, resume)
-
-    # ---- stage 4: near-dup pair generation (D7-D10) ----------------------
-    # ONE materialization for both pair families: minhash-verified and
-    # simhash pairs consume the same persisted `sigs` frame, so unioning
-    # them into a single stage halves the stage barriers (write + count)
-    # of the shuffle-bound part of the job.
-    def build_pairs():
-        mh = verified_pairs(sigs, cfg).select(
-            "a_id", "b_id", F.col("agree_cnt").alias("score"),
-            F.lit("minhash").alias("kind"),
-        )
-        sh = simhash_pairs(sigs, cfg).select(
-            "a_id", "b_id", F.col("hamming").alias("score"),
-            F.lit("simhash").alias("kind"),
-        )
-        return mh.unionByName(sh)
-
-    pairs = _stage(spark, out_dir, man, "pairs", build_pairs, resume)
-    mh_pairs = pairs.filter(F.col("kind") == "minhash")
-    sh_pairs = pairs.filter(F.col("kind") == "simhash")
+    sigs = stage("signatures", build_sigs)
 
     # ---- stage 4b: substring-overlap extents (D13, classification only) --
     # Suffix-array refinement over L-gram candidates: finds contains /
     # contained_in relations (the reference's partial-match scan,
-    # fuzzy_matcher.py:213-236). Informational output — does NOT feed CC
-    # (containment is not duplication).
+    # fuzzy_matcher.py:213-236). Informational output: it feeds neither CC
+    # (containment is not duplication) nor docs_dedup, so it runs on a
+    # thread of its own beside the near-dup chain below. `docs`, which its
+    # survivors read, was materialized by the signatures stage. The thread
+    # inherits this thread's local properties (job group, scheduler pool),
+    # so its jobs are counted and cancelled with the caller's.
     def build_substring():
         from quarrycore_spark.operators.substring import (
             substring_extents,
@@ -391,32 +414,74 @@ def run_pipeline(
         cand = winnow_doc_pairs(survivors, mo)
         return substring_extents(survivors, cand, mo)
 
+    substring_failed: list[BaseException] = []
+
+    def run_substring() -> None:
+        try:
+            stage("substring_pairs", build_substring)
+        except BaseException as e:  # raised again on the caller's thread
+            substring_failed.append(e)
+
+    def join_substring() -> None:
+        if substring:
+            substring_thread.join()
+            if substring_failed:
+                raise substring_failed[0]
+
     if substring:
-        _stage(spark, out_dir, man, "substring_pairs", build_substring, resume)
+        substring_thread = InheritableThread(target=run_substring)
+        substring_thread.start()
+    try:
+        # ---- stage 4: near-dup pair generation (D7-D10) ------------------
+        # ONE materialization for both pair families: minhash-verified and
+        # simhash pairs consume the same persisted `sigs` frame, so
+        # unioning them into a single stage halves the stage barriers
+        # (write + count) of the shuffle-bound part of the job.
+        def build_pairs():
+            mh = verified_pairs(sigs, cfg).select(
+                "a_id", "b_id", F.col("agree_cnt").alias("score"),
+                F.lit("minhash").alias("kind"),
+            )
+            sh = simhash_pairs(sigs, cfg).select(
+                "a_id", "b_id", F.col("hamming").alias("score"),
+                F.lit("simhash").alias("kind"),
+            )
+            return mh.unionByName(sh)
 
-    # ---- stage 5: connected components (D16) -----------------------------
-    edges = (
-        exact_edges.union(mh_pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v")))
-        .union(sh_pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v")))
-        .distinct()
-    )
-    clusters = _stage(
-        spark, out_dir, man, "clusters",
-        lambda: connected_components(
-            edges, docs.select("doc_id"),
-            checkpoint_dir=os.path.join(out_dir, "cc"),
-            resume=resume,
-        ),
-        resume,
-    )
+        pairs = stage("pairs", build_pairs)
+        mh_pairs = pairs.filter(F.col("kind") == "minhash")
+        sh_pairs = pairs.filter(F.col("kind") == "simhash")
 
-    # ---- stage 6: final labeled docs table (see final_table) -------------
-    final = _stage(
-        spark, out_dir, man, "docs_dedup",
-        lambda: final_table(extracted, docs, clusters, mh_pairs, sh_pairs, cfg),
-        resume,
-        extra_obs=[F.sum(F.col("is_duplicate").cast("long")).alias("dups")],
-    )
+        # ---- stage 5: connected components (D16) -------------------------
+        edges = (
+            exact_edges.union(mh_pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v")))
+            .union(sh_pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v")))
+            .distinct()
+        )
+        clusters = stage(
+            "clusters",
+            lambda: connected_components(
+                edges, docs.select("doc_id"),
+                checkpoint_dir=os.path.join(out_dir, "cc"),
+                resume=resume,
+            ),
+        )
+
+        # ---- stage 6: final labeled docs table (see final_table) ---------
+        final = stage(
+            "docs_dedup",
+            lambda: final_table(extracted, docs, clusters, mh_pairs, sh_pairs, cfg),
+            extra_obs=[F.sum(F.col("is_duplicate").cast("long")).alias("dups")],
+        )
+    except BaseException as err:
+        # the chain's failure is the one raised; a substring failure rides
+        # along as its __context__
+        try:
+            join_substring()
+        except BaseException:
+            raise err
+        raise
+    join_substring()
 
     # ---- lineage: rows per write partition of each stage (north-rule
     # lineage), from the stage files' parquet footers -------------------
@@ -424,7 +489,7 @@ def run_pipeline(
     if substring:
         lineage_stages.append("substring_pairs")
     table = _footer_lineage(
-        {stage: man["stages"][stage]["path"] for stage in lineage_stages}
+        {name: man["stages"][name]["path"] for name in lineage_stages}
     )
     lineage_dir = os.path.join(out_dir, "lineage")
     shutil.rmtree(lineage_dir, ignore_errors=True)
@@ -433,7 +498,7 @@ def run_pipeline(
     lineage = spark.createDataFrame(table)
 
     metrics = [
-        {"stage": k, **v} for k, v in man["stages"].items()
+        {"stage": k, **man["stages"][k]} for k in STAGE_ORDER if k in man["stages"]
     ]
     # the summary rides the docs_dedup write's Observation (kept in the
     # manifest, so a resumed run reports it too)

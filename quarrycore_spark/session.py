@@ -6,7 +6,8 @@ spark-submit. AQE is on so skewed LSH-bucket joins are split at runtime.
 Python-worker tuning lives here too: allocator settings the workers inherit
 (``WORKER_ALLOC_ENV``) and stat-checked zip importers, which stop every task
 from re-reading pyspark.zip's and the Spark jar's directories
-(``install_stat_checked_zipimport``).
+(``install_stat_checked_zipimport``). The generated-code cache is sized
+to hold a whole pipeline pass (``CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -140,6 +141,19 @@ def ensure_py_files(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+# Entries in Spark's cache of compiled generated classes
+# (spark.sql.codegen.cache.maxEntries, default 100; a static conf, so it is
+# set when the session is built). The cache is an LRU keyed by generated
+# source, and the working sets measured here are larger than the default:
+# one warm 1,000-page pipeline pass generates ~150 distinct sources, the
+# five pair-family registry queries ~120, one streaming epoch ~20. An LRU
+# smaller than the set a loop cycles through hits nothing: each class is
+# evicted before the loop reaches it again, so every warm pass recompiled
+# 140-144 classes with Janino (~0.8 s on the pass's serial path). At 2,000
+# entries the first three warm passes compiled 8, 4 and 0.
+CODEGEN_CACHE_ENTRIES = 2000
+
+
 def get_spark(
     app_name: str = "quarrycore_spark",
     cores: int | None = None,
@@ -167,6 +181,7 @@ def get_spark(
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # read small test parquet with enough splits to use all cores
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # NOTE: an earlier revision disabled spark.sql.constraintPropagation
         # to dodge a Spark 4.1 UnionBase.rewriteConstraints
         # NoSuchElementException on unions of localCheckpointed

@@ -25,7 +25,8 @@ def _skewed_embeddings(spark, n: int = 400, seed: int = 7):
     direction and every non-centroid vector sits in a tight cone around it,
     while the other centroid vectors (31, 62, …) point in random far
     directions. Every non-centroid vector therefore assigns to centroid 0 —
-    one IVF list holds ~the whole table, the worst-case rerank skew."""
+    one IVF list holds ~the whole table, the worst-case rerank skew. Rows
+    are scaled to unit norm, which the integer scores assume."""
     rng = np.random.default_rng(seed)
     base = np.zeros(DIM)
     base[0] = 1.0
@@ -35,7 +36,7 @@ def _skewed_embeddings(spark, n: int = 400, seed: int = 7):
             v = rng.standard_normal(DIM)  # far random centroid
         else:
             v = base + 0.01 * rng.standard_normal(DIM)
-        rows.append((i, [float(x) for x in v]))
+        rows.append((i, [float(x) for x in v / np.linalg.norm(v)]))
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
@@ -94,13 +95,14 @@ def test_centroid_probes_distributed_tiebreak(spark):
 def _correlated_embeddings(spark, n: int = 300, seed: int = 11, noise: float = 0.0):
     """Adversarial LSH input: every vector on (noise=0) or in a tight cone
     around (noise>0) ONE direction — each band collapses to one or two
-    mega-buckets."""
+    mega-buckets. Rows are scaled to unit norm: the integer scores assume
+    it, and hyperplane band signs do not depend on scale."""
     rng = np.random.default_rng(seed)
     base = np.ones(DIM)
-    rows = [
-        (i, [float(x) for x in base + noise * rng.standard_normal(DIM)])
-        for i in range(n)
-    ]
+    rows = []
+    for i in range(n):
+        v = base + noise * rng.standard_normal(DIM)
+        rows.append((i, [float(x) for x in v / np.linalg.norm(v)]))
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
@@ -154,11 +156,15 @@ def test_ann_lsh_cap_keeps_small_buckets(spark):
 
     rng = np.random.default_rng(5)
     base = np.ones(DIM)
+
+    def unit(v):  # the integer scores assume unit-norm embeddings
+        return [float(x) for x in v / np.linalg.norm(v)]
+
     rows = [
-        (i, [float(x) for x in base + 0.001 * rng.standard_normal(DIM)])
+        (i, unit(base + 0.001 * rng.standard_normal(DIM)))
         for i in range(3)  # small clique: bucket size 3, well under cap
     ] + [
-        (100 + i, [float(x) for x in rng.standard_normal(DIM)])
+        (100 + i, unit(rng.standard_normal(DIM)))
         for i in range(50)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -203,6 +209,25 @@ def test_ann_lsh_pairs_batch_boundaries(spark):
     }
     assert clusters <= {(r[0], r[1]) for r in default}
     assert small == default
+
+
+@pytest.mark.parametrize("op", ["ann_lsh_pairs", "embedding_dup_pairs"])
+def test_pair_operators_refuse_norms_that_wrap_int64(spark, op):
+    """N(0, 1)^64 vectors have norm ~8, past the ~3.1 at which the integer
+    cosine scores wrap int64: the operators raise, naming a vector and the
+    bound, instead of returning wrapped scores."""
+    rng = np.random.default_rng(17)
+    rows = []
+    for c in range(8):  # 8 tight clusters of 5, as in the batch test
+        centre = rng.standard_normal(DIM)
+        rows += [
+            (10 * c + i, [float(x) for x in centre + 0.001 * rng.standard_normal(DIM)])
+            for i in range(5)
+        ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match=r"vec_id \d+: quantized norm² .* exceeds "
+                       rf"MAX_QUANTIZED_NORM2 = {ann.MAX_QUANTIZED_NORM2}"):
+        getattr(ann, op)(emb).collect()
 
 
 def test_ann_topk_query_cap_raises(spark, monkeypatch):

@@ -471,3 +471,143 @@ def test_pipeline_job_budget(spark, corpus, pipeline_result, spark_jobs, tmp_pat
     out = str(tmp_path / "budget")
     jobs = spark_jobs(lambda: run_pipeline(spark, pages, out, resume=False))
     assert jobs <= PIPELINE_JOB_BUDGET, f"{jobs} Spark jobs > {PIPELINE_JOB_BUDGET}"
+
+
+# ---------------------------------------------------------------------------
+# warm-pass fixed costs: generated-code cache, substring stage overlap
+# ---------------------------------------------------------------------------
+
+STAGES = ("signatures", "pairs", "substring_pairs", "clusters", "docs_dedup")
+
+
+def _table_hashes(spark, out: str) -> dict:
+    """Sorted row-set SHA-256 of each checkpointed stage table."""
+    import hashlib
+
+    return {
+        t: hashlib.sha256(
+            "\n".join(
+                sorted(repr(tuple(r)) for r in spark.read.parquet(f"{out}/{t}").collect())
+            ).encode()
+        ).hexdigest()
+        for t in STAGES
+    }
+
+
+def _manifest(out: str) -> dict:
+    import json
+
+    with open(f"{out}/_manifest.json") as f:
+        return json.load(f)
+
+
+def test_warm_pass_reuses_generated_code(spark, corpus, pipeline_result, tmp_path):
+    """A warm pass finds its generated classes in Spark's codegen cache. A
+    cache smaller than one pass's working set (~150 sources) evicts each
+    class before the next pass asks for it, and every warm pass
+    recompiled ~145 of them. Adaptive execution picks some plan shapes by
+    which shuffle finishes first, so a shape seen for the first time
+    compiles its few classes once; of two passes after a warm-up, at least
+    one compiles (almost) nothing."""
+    cg = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = cg.METRIC_COMPILATION_TIME()
+    pages = pages_dataframe(spark, corpus)
+    counts = []
+    for i in range(3):
+        before = compiles.getCount()
+        run_pipeline(spark, pages, str(tmp_path / f"warm{i}"), resume=False)
+        counts.append(compiles.getCount() - before)
+    assert min(counts[1:]) <= 10, f"classes compiled per warm pass: {counts}"
+
+
+def test_metrics_list_stages_in_pipeline_order(pipeline_result):
+    import json
+
+    _, out = pipeline_result
+    with open(f"{out}/metrics.json") as f:
+        stages = [m["stage"] for m in json.load(f)]
+    assert stages == [
+        "extracted", "exact", "signatures", "pairs", "substring_pairs",
+        "clusters", "docs_dedup", "summary",
+    ]
+
+
+def test_substring_failure_raised_after_chain(spark, corpus, pipeline_result, tmp_path, monkeypatch):
+    """The substring stage runs beside the near-dup chain: its failure is
+    raised once docs_dedup is checkpointed, and a resumed run then writes
+    the substring stage alone and matches a clean run table for table."""
+    import os
+
+    from quarrycore_spark.operators import substring
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("substring stage broke")
+
+    monkeypatch.setattr(substring, "substring_extents", broken)
+    out = str(tmp_path / "subfail")
+    pages = pages_dataframe(spark, corpus)
+    with pytest.raises(RuntimeError, match="substring stage broke"):
+        run_pipeline(spark, pages, out, resume=False)
+    stages = _manifest(out)["stages"]
+    assert "docs_dedup" in stages and "substring_pairs" not in stages
+
+    monkeypatch.undo()
+    written = {
+        s: os.path.getmtime(f"{out}/{s}/_SUCCESS")
+        for s in ("extracted", "signatures", "pairs", "clusters", "docs_dedup")
+    }
+    run_pipeline(spark, pages, out, resume=True)
+    for s, mtime in written.items():
+        assert os.path.getmtime(f"{out}/{s}/_SUCCESS") == mtime, f"{s} was rewritten"
+    assert "substring_pairs" in _manifest(out)["stages"]
+    _, clean = pipeline_result
+    assert _table_hashes(spark, out) == _table_hashes(spark, clean)
+
+
+def test_chain_failure_waits_for_substring(spark, tmp_path, monkeypatch):
+    """A failing near-dup chain is raised only after the substring stage
+    has finished: no Spark job outlives run_pipeline."""
+    from quarrycore_spark.plans import pipeline
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("connected components broke")
+
+    monkeypatch.setattr(pipeline, "connected_components", broken)
+    out = str(tmp_path / "ccfail")
+    pages = pages_dataframe(spark, generate_pages(80, seed=3))
+    with pytest.raises(RuntimeError, match="connected components broke"):
+        run_pipeline(spark, pages, out, resume=False)
+    assert "substring_pairs" in _manifest(out)["stages"]
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+
+
+def test_chain_failure_wins_over_substring_failure(spark, tmp_path, monkeypatch):
+    from quarrycore_spark.operators import substring
+    from quarrycore_spark.plans import pipeline
+
+    def broken(what):
+        def fail(*args, **kwargs):
+            raise RuntimeError(f"{what} broke")
+
+        return fail
+
+    monkeypatch.setattr(pipeline, "connected_components", broken("cc"))
+    monkeypatch.setattr(substring, "substring_extents", broken("substring"))
+    pages = pages_dataframe(spark, generate_pages(40, seed=4))
+    with pytest.raises(RuntimeError, match="cc broke") as err:
+        run_pipeline(spark, pages, str(tmp_path / "bothfail"), resume=False)
+    assert str(err.value.__context__) == "substring broke"
+
+
+def test_unknown_family_fails_before_any_stage(spark, spark_jobs, tmp_path):
+    import os
+
+    out = tmp_path / "family"
+    pages = pages_dataframe(spark, generate_pages(20, seed=6))
+
+    def run():
+        with pytest.raises(ValueError, match="unknown signature family 'Poly'"):
+            run_pipeline(spark, pages, str(out), family="Poly")
+
+    assert spark_jobs(run) == 0
+    assert not os.path.exists(out / "_manifest.json")
