@@ -10,10 +10,12 @@ default parallelism — only when the plan is BELOW it, so at real scale
 shuffle.
 
 The decision runs no Spark job when the partition count is fixed by a file
-scan (see ``_planned_partitions``). ``df.rdd.getNumPartitions()`` would
-execute every adaptive query stage under the frame first — on the
-pipeline's survivor frame, a broadcast join over the extraction scan,
-that is one broadcast job per call.
+scan or by ``repartition(n)`` (see ``_planned_partitions``).
+``df.rdd.getNumPartitions()`` would execute every adaptive query stage
+under the frame first — on the pipeline's survivor frame, a broadcast join
+over the extraction scan, that is one broadcast job per call; on a media
+frame (a ``mapInPandas`` over a ``spread`` docs scan), it runs the whole
+repartition shuffle once to count its partitions and again for the query.
 """
 
 from __future__ import annotations
@@ -21,14 +23,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 # physical nodes that keep their child's partitioning one-to-one
-_NARROW = ("ProjectExec", "FilterExec")
+_NARROW = ("ProjectExec", "FilterExec", "MapInPandasExec")
 
 
 def _planned_partitions(df: DataFrame) -> int | None:
     """df's partition count read from its physical plan, without a job:
     follow narrow nodes and the stream side of a broadcast hash join down
     to a file scan, whose split count the driver computes from the file
-    listing. None when anything else fixes the count (an exchange's
+    listing, or to a ``repartition(n)`` / ``repartition(n, cols)``
+    exchange (origin REPARTITION_BY_NUM), which has exactly n partitions:
+    adaptive execution coalesces the exchanges it inserts and those of
+    ``repartition(cols)``, never one with a number the caller gave.
+    None when anything else fixes the count (any other exchange's
     post-shuffle count is known only after it runs)."""
     node = df._jdf.queryExecution().sparkPlan()
     while True:
@@ -42,6 +48,11 @@ def _planned_partitions(df: DataFrame) -> int | None:
             # (partition filters may hold a dynamic-pruning subquery that
             # is only executable after physical preparation)
             return node.inputRDDs().head().getNumPartitions()
+        elif (
+            cls == "ShuffleExchangeExec"
+            and node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+        ):
+            return node.outputPartitioning().numPartitions()
         else:
             return None
 

@@ -253,30 +253,31 @@ def _sampled(
     }
     spec = [(c, *known[c]) for c in classes]
     limit = sum(cap + 1 for *_, cap in spec)
-    rows = (
+    # toArrow, not collect: a collect under CollectLimit scans one
+    # partition in a first job and the rest in a second, so the quantize
+    # kernel feeding it ran in two serial waves; the Arrow collect takes the
+    # same bounded rows in one job.
+    tbl = (
         qv.filter(reduce(operator.or_, [F.col("vec_id") % s == 0 for _, _, s, _ in spec]))
         .limit(limit)
-        .collect()
+        .toArrow()
     )
-    rows.sort(key=lambda r: r["vec_id"])
-    members = [[r for r in rows if r["vec_id"] % s == 0] for _, _, s, _ in spec]
+    ids = tbl.column("vec_id").to_numpy()
+    order = np.argsort(ids, kind="stable")
+    members = [order[ids[order] % s == 0] for _, _, s, _ in spec]
     if any(len(m) > cap for m, (*_, cap) in zip(members, spec)):
         raise RuntimeError(
-            f"refusing to broadcast; {len(rows)} rows collected (limit {limit}) hold "
+            f"refusing to broadcast; {tbl.num_rows} rows collected (limit {limit}) hold "
             + "; ".join(
                 f"{c}: {len(m)} (cap {cap}, {knob}={s})"
                 for m, (c, knob, s, cap) in zip(members, spec)
             )
             + ". Raise the stride of each class over its cap"
         )
+    q = tbl.column("q").to_numpy()  # bigint columns: int64 arrays
+    na = tbl.column("na").to_numpy()
     return [
-        (
-            np.array([r["vec_id"] for r in m], dtype=np.int64),
-            np.stack([np.asarray(r["q"], dtype=np.int64) for r in m])
-            if m
-            else np.zeros((0, 1), dtype=np.int64),
-            np.array([r["na"] for r in m], dtype=np.int64),
-        )
+        (ids[m], np.stack(q[m]) if len(m) else np.zeros((0, 1), dtype=np.int64), na[m])
         for m in members
     ]
 

@@ -11,6 +11,8 @@ Checkpointing: each iteration optionally writes the edge state to
 ``{checkpoint_dir}/iter_{i}`` plus a ``manifest.json``; a killed run resumes
 from the last completed iteration (north-rule resumability). Without a
 checkpoint dir, ``localCheckpoint()`` truncates lineage in memory.
+Read-backs pass a schema (the one just written, or the footer's on
+resume), so none runs a schema-inference job.
 """
 
 from __future__ import annotations
@@ -22,6 +24,8 @@ import os
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+
+from quarrycore_spark.sources.tables import read_parquet
 
 log = logging.getLogger(__name__)
 
@@ -143,7 +147,7 @@ def connected_components(
         rec = man.get("input")
         if rec is not None and tuple(rec) == input_sum:
             start_iter = man["iteration"] + 1
-            state = spark.read.parquet(man["path"])
+            state = read_parquet(spark, man["path"])
             prev_sum = (man["edges"], man["checksum"])
             if man.get("converged"):
                 return _labels(state, vertices)
@@ -176,7 +180,7 @@ def connected_components(
             state.observe(obs, *_checksum_cols()).write.mode("overwrite").parquet(path)
             got = obs.get
             cur = (got["n"] or 0, got["s"] or 0)
-            state = spark.read.parquet(path)
+            state = spark.read.schema(state.schema).parquet(path)
         else:
             state = state.localCheckpoint(eager=False)
             cur = _checksum(state)  # this action materializes the checkpoint

@@ -19,6 +19,9 @@ Differences by design (SURVEY §3.1 "Spark translation"):
 
 Lineage: one row per (stage, write partition) — each parquet file's row
 count, read from the stage files' footers on the driver (no Spark job).
+A resumed stage reads its checkpoint with the schema from its footer
+(``sources.tables.read_parquet``), so resuming a completed run runs no
+Spark job.
 
 Jobs per pass: a warm pass over 1,000 crawl pages runs 36 Spark jobs (58
 before stage read-back took the written schema, spread() read partition
@@ -77,6 +80,7 @@ from quarrycore_spark.operators.cc import connected_components
 from quarrycore_spark.operators.lsh import verified_pairs
 from quarrycore_spark.operators.signatures import _check_family, with_signatures
 from quarrycore_spark.operators.simhash import simhash_pairs
+from quarrycore_spark.sources.tables import read_parquet
 
 
 # metrics.json order: the pipeline's stage order, whichever stage finishes
@@ -123,7 +127,7 @@ def _stage(
     two threads share the manifest; lock guards its updates and saves."""
     path = os.path.join(out_dir, name)
     if resume and name in man["stages"]:
-        return spark.read.parquet(man["stages"][name]["path"])
+        return read_parquet(spark, man["stages"][name]["path"])
     t0 = time.time()
     df = builder()
     # Bound the output file count to ~4 files per core: a stage inheriting
@@ -547,7 +551,7 @@ def main() -> None:
             .select("url", "warc_ts", "html", "text", "lang")
         )
     elif args and args[0] == "--pages":
-        pages = spark.read.parquet(args[1])
+        pages = read_parquet(spark, args[1])
     else:
         n = int(args[0]) if args else 2000
         pages = pages_dataframe(spark, generate_pages(n))

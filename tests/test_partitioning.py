@@ -1,6 +1,7 @@
 """spread(): the partition-count decision ahead of CPU-bound kernels runs
-no Spark job on scan-rooted plans, broadcast joins over a scan included,
-and agrees with the count `.rdd` reports."""
+no Spark job on scan-rooted plans (broadcast joins and mapInPandas over a
+scan included) or behind repartition(n), and agrees with the count `.rdd`
+reports."""
 
 from __future__ import annotations
 
@@ -45,6 +46,43 @@ def test_spread_falls_back_past_an_exchange(spark):
     par = spark.sparkContext.defaultParallelism
     assert agg.rdd.getNumPartitions() < par
     wide = spread(agg)
-    assert _planned_partitions(wide) is None
+    assert _planned_partitions(wide) == par
     assert wide.rdd.getNumPartitions() == par
     assert spread(wide) is wide
+
+
+def test_spread_is_job_free_through_map_in_pandas(spark, spark_jobs, tmp_path):
+    """mapInPandas keeps its child's partitions: over a scan, and over a
+    spread (repartition(n)) scan — the media frame's shape."""
+
+    def identity(batches):
+        yield from batches
+
+    path = str(tmp_path / "scan")
+    spark.range(500).repartition(3).write.parquet(path)
+    scan = spark.read.parquet(path)
+    par = spark.sparkContext.defaultParallelism
+    narrow = scan.mapInPandas(identity, schema=scan.schema)
+    widened = spread(scan).mapInPandas(identity, schema=scan.schema)
+    for df, n in ((narrow, 3), (widened, par)):
+        planned, spread_out = [], []
+        assert spark_jobs(lambda: planned.append(_planned_partitions(df))) == 0
+        assert spark_jobs(lambda: spread_out.append(spread(df))) == 0
+        assert planned[0] == df.rdd.getNumPartitions() == n
+        assert spread_out[0].rdd.getNumPartitions() == par
+    assert spread(widened) is widened
+
+
+def test_spread_is_job_free_behind_repartition_by_number(spark, spark_jobs):
+    """repartition(n), with or without columns, fixes n partitions, which
+    adaptive execution never coalesces; repartition by columns alone
+    leaves the count to adaptive execution and keeps the `.rdd` fallback."""
+    par = spark.sparkContext.defaultParallelism
+    base = spark.range(100)
+    for df, n in (
+        (base.repartition(2), 2), (base.repartition(par), par), (base.repartition(par + 3, "id"), par + 3)
+    ):
+        planned = []
+        assert spark_jobs(lambda: planned.append(_planned_partitions(df))) == 0
+        assert planned[0] == df.rdd.getNumPartitions() == n
+    assert _planned_partitions(base.repartition("id")) is None

@@ -162,6 +162,19 @@ def test_pipeline_resume_identical(spark, corpus, pipeline_result):
     assert first == second
 
 
+def test_pipeline_resume_of_a_completed_run_is_job_free(spark, corpus, pipeline_result, spark_jobs):
+    """Every stage is in the manifest, so a resumed run only reads its
+    checkpoints back, with schemas from the parquet footers: no Spark job
+    (one schema-inference job per stage before), same schemas."""
+    res, out = pipeline_result
+    pages = pages_dataframe(spark, corpus)
+    got = []
+    assert spark_jobs(lambda: got.append(run_pipeline(spark, pages, out, resume=True))) == 0
+    res2 = got[0]
+    for a, b in ((res.docs, res2.docs), (res.clusters, res2.clusters), (res.lineage, res2.lineage)):
+        assert a.schema == b.schema
+
+
 def test_pipeline_resume_refuses_other_settings(spark, tmp_path):
     """Resuming over checkpoints written under another family,
     cascade_threshold or cfg raises, names each differing setting, and
